@@ -14,9 +14,16 @@ singleton session immediately (single-open-session state can't hold
 two; the built-in operator could still merge it with other equally
 late stragglers).
 
-Scale notes: state is per-key (one open session each), evicted on
-timeout — bounded like the built-in operator. The pandas function
-receives Arrow batches per key; no driver involvement.
+Scale notes: the sessionizers, CEP and absence operators keep state
+per key (one open session or anchor list each), evicted on timeout
+or drain — bounded like the built-in operator — and their pandas
+function receives Arrow batches per key. EWMA keeps state per key
+BUCKET (``EWMA_BUCKETS``, fixed): one call per bucket per micro-batch,
+and a batch rewrites every bucket it touches, which is O(keys in
+those buckets) — ~160 KB of keys and doubles at 10k keys when every
+bucket is touched. A checkpoint written by the earlier per-key EWMA
+state fails on restart with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE
+and must start fresh. In either layout state stays on the executors.
 """
 
 from __future__ import annotations
@@ -66,7 +73,15 @@ def sessionize_with_state(
     )
 
 
-EWMA_STATE_SCHEMA = "s double"
+# EWMA state is kept per key BUCKET, not per key: one
+# applyInPandasWithState call costs a fixed Arrow slice, GroupState
+# JSON/pickle round trip and pandas frame, so grouping by a fixed hash
+# bucket bounds the Python calls per micro-batch at EWMA_BUCKETS
+# however many keys the batch touches. A constant, never a parameter
+# or session conf: a key's bucket must not change across restarts of
+# one checkpoint.
+EWMA_BUCKETS = 64
+EWMA_STATE_SCHEMA = "k array<bigint>, s array<double>"
 
 
 def ewma_with_state(
@@ -83,14 +98,23 @@ def ewma_with_state(
     ONE double per key, one output row per event, emitted in the
     event's own micro-batch (no watermark-flush latency, no timeout).
 
+    Rows are grouped by ``pmod(xxhash64(key), EWMA_BUCKETS)``, so each
+    micro-batch makes at most EWMA_BUCKETS Python calls. A call sorts
+    its rows by (key, ts, id, value), runs the recursion key by key
+    from the bucket's state — parallel arrays of keys (a NULL key is
+    its own key, as in the batch operator's groupBy) and their last
+    smoothed values — and writes the whole bucket state back.
+
     The recursion uses the same IEEE ops in the same order as the
     batch operator's pandas ``ewm`` C-loop, and the same explicit
     half-away rounding, so for per-key time-ordered arrival the
     streamed results are BIT-IDENTICAL to the batch oracle — the
     batch/stream-parity contract (StreamingFlinkSQL.java's premise)
-    extended to a custom stateful operator. State is O(keys) doubles:
-    unconditionally bounded, no eviction needed.
+    extended to a custom stateful operator. State is O(keys), one key
+    and one double each: unconditionally bounded, no eviction needed;
+    a batch rewrites every bucket it touches, O(keys in those buckets).
     """
+    from pyspark.sql import functions as F
 
     output_schema = (
         f"{id_col} bigint, {key_col} bigint, {ts_col} timestamp, "
@@ -98,45 +122,66 @@ def ewma_with_state(
     )
 
     def fn(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
+        _bucket: tuple, batches: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import math
-
+        import numpy as np
         import pandas as pd
 
-        rows: list[dict] = []
-        s = state.get[0] if state.exists else None
-        evs = []
-        for pdf in batches:
-            for eid, t, v in zip(pdf[id_col], pdf[ts_col], pdf[value_col]):
-                evs.append((int(t.value // 1000), int(eid), float(v)))
-        # (ts, id) order: the id is the deterministic tie-break the
-        # batch operator documents as a uniqueness precondition
-        evs.sort()
-        for t_us, eid, v in evs:
-            s = v if s is None else alpha * v + (1.0 - alpha) * s
-            rows.append(
-                {
-                    id_col: eid,
-                    key_col: key[0],
-                    ts_col: pd.Timestamp(t_us, unit="us"),
-                    value_col: v,
-                    "ewma": math.copysign(
-                        math.floor(abs(s) * 1e6 + 0.5) / 1e6, s
-                    ),
-                }
+        pdf = pd.concat(list(batches), ignore_index=True)
+        keys = pdf[key_col]
+        null = keys.isna().to_numpy()
+        # a chunk holding a NULL key arrives as float64: exact only up
+        # to 2**53 — fail rather than merge two keys' recursions
+        if null.any() and keys.abs().max() > 2**53:
+            raise ValueError(
+                "ewma_with_state: |key| > 2**53 next to a NULL key "
+                "cannot be told apart in float64"
             )
-        if s is not None:
-            state.update((s,))
-        if rows:
-            yield pd.DataFrame(rows)
+        kint = keys.fillna(0).to_numpy(np.int64)
+        ids = pdf[id_col].to_numpy()
+        ts = pdf[ts_col].to_numpy()
+        vals = pdf[value_col].to_numpy(np.float64)
+        order = np.lexsort((vals, ids, ts.view(np.int64), kint, null))
+        kint, null, vals = kint[order], null[order], vals[order]
+        starts = np.flatnonzero(
+            np.r_[True, (kint[1:] != kint[:-1]) | (null[1:] != null[:-1])]
+        )
 
-    return events.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=output_schema,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        last = dict(zip(*state.get)) if state.exists else {}
+        vs = vals.tolist()
+        out = [0.0] * len(vs)
+        a, b = alpha, 1.0 - alpha
+        for lo, hi in zip(starts.tolist(), [*starts[1:].tolist(), len(vs)]):
+            k = None if null[lo] else int(kint[lo])
+            s = last.get(k)
+            for i in range(lo, hi):
+                s = vs[i] if s is None else a * vs[i] + b * s
+                out[i] = s
+            last[k] = s
+        state.update((list(last), list(last.values())))
+
+        e = np.array(out)
+        yield pd.DataFrame(
+            {
+                id_col: ids[order],
+                key_col: keys.to_numpy()[order],
+                ts_col: ts[order],
+                value_col: vals,
+                "ewma": np.copysign(np.floor(np.abs(e) * 1e6 + 0.5) / 1e6, e),
+            }
+        )
+
+    bucket = F.pmod(F.xxhash64(F.col(key_col)), F.lit(EWMA_BUCKETS))
+    return (
+        events.withColumn("__ewma_bucket", bucket)
+        .groupBy("__ewma_bucket")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=output_schema,
+            stateStructType=EWMA_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
     )
 
 

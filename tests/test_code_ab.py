@@ -1,5 +1,5 @@
 """scripts/code_ab.py — the mechanized same-host code A/B
-(BASELINE.md protocol). The heavy path (worktree + two Spark
+(BASELINE.md protocol). The heavy path (old-tree checkout + two Spark
 processes per block) is exercised live each time a bench flag is
 adjudicated; these tests pin the cheap contracts that would otherwise
 only fail mid-adjudication."""
@@ -60,3 +60,38 @@ def test_run_tree_parses_result_line(tmp_path):
     )
     out = mod.run_tree("/anywhere", str(runner), "/tmp", 2, ["q_a"])
     assert out == {"q_a": 1.5}
+
+
+def test_summarize_medians_quartiles_and_wins():
+    """The perfbench A/B summary: per-side median and quartiles, and
+    the pairs the new side won in the metric's better direction — a
+    tie or a pair missing the metric counts for neither side."""
+    mod = _load()
+    pairs = [
+        ({"drain_eps": 100.0, "latency_p50_s": 0.5}, {"drain_eps": 130.0, "latency_p50_s": 0.4}),
+        ({"drain_eps": 110.0, "latency_p50_s": 0.5}, {"drain_eps": 110.0, "latency_p50_s": 0.6}),
+        ({"drain_eps": 90.0, "latency_p50_s": 0.5}, {"drain_eps": 120.0, "latency_p50_s": 0.5}),
+        ({"drain_eps": 120.0}, {}),  # a failed new run: no metrics
+    ]
+    rows = mod.summarize(
+        pairs, [("drain_eps", "higher"), ("latency_p50_s", "lower"), ("setup_s", "lower")]
+    )
+    by = {r["name"]: r for r in rows}
+    assert set(by) == {"drain_eps", "latency_p50_s"}  # no data, no row
+    d = by["drain_eps"]
+    assert d["old"]["median"] == 100.0 and d["new"]["median"] == 120.0
+    assert (d["old"]["q1"], d["old"]["q3"]) == (90.0, 110.0)
+    assert d["wins"] == 2 and d["pairs"] == 4  # tie and missing count for neither
+    lat = by["latency_p50_s"]
+    assert lat["wins"] == 1  # lower is better: 0.4 < 0.5 only
+    # one pair: quartiles collapse onto the value instead of raising
+    one = mod.summarize([({"x": 1.0}, {"x": 2.0})], [("x", "higher")])[0]
+    assert one["old"] == {"median": 1.0, "q1": 1.0, "q3": 1.0}
+    table = mod.format_summary(rows)
+    assert "| drain_eps | higher | 100 [90, 110] | 120 [110, 130] | +20.0% | 2/4 |" in table
+
+
+def test_seed_list_accepts_range_and_single_seed():
+    mod = _load()
+    assert mod.seed_list("11-14") == [11, 12, 13, 14]
+    assert mod.seed_list("5") == [5]

@@ -394,12 +394,17 @@ def test_ewma_state_restart_continues_recursion(spark, tmpdirs):
     """Kill/restart for the custom stateful EWMA: after a restart
     from checkpoint, the recursion CONTINUES from the persisted
     per-key state (no reset to v₁, no double-emission) — the
-    exactly-once contract for user-managed state."""
+    exactly-once contract for user-managed state. State is kept per
+    key bucket, so the inputs mix keys that share a bucket, keys in
+    other buckets, a key first seen after the restart and a NULL key
+    (its own recursion, as in the batch operator's groupBy), and the
+    whole scenario runs under two shuffle-partition counts: every
+    value must be bit-equal to batch ``ewma`` over the same rows."""
     import pandas as pd
 
-    from flink_samples_spark.streaming.stateful import ewma_with_state
+    from flink_samples_spark.operators.timeseries import ewma
+    from flink_samples_spark.streaming.stateful import EWMA_BUCKETS, ewma_with_state
 
-    replay, sink, cp = tmpdirs
     s = lambda sec: BASE + dt.timedelta(seconds=sec)
 
     schema = T.StructType(
@@ -411,38 +416,122 @@ def test_ewma_state_restart_continues_recursion(spark, tmpdirs):
         ]
     )
 
-    def write_events(name, rows, seq):
-        path = os.path.join(replay, f"{name}.parquet")
-        pd.DataFrame(
-            {
-                "event_id": [r[0] for r in rows],
-                "ts": [r[1] for r in rows],
-                "user_id": [r[2] for r in rows],
-                "value": [r[3] for r in rows],
-            }
-        ).to_parquet(
-            path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-        os.utime(path, (1_700_000_000 + seq, 1_700_000_000 + seq))
-
-    def run():
-        stream = file_replay_stream(spark, replay, schema)
-        _run_available_now(ewma_with_state(stream, alpha=0.25), sink, cp)
-
-    # first run: values 4, 8 for user 7 → ewma 4.0, then .25*8+.75*4=5
-    write_events("c000", [(0, s(0), 7, 4.0), (1, s(1), 7, 8.0)], 0)
-    run()
-    # restart with NEW data: continuation must smooth from s=5.0
-    # (.25*12 + .75*5 = 6.75), NOT restart at 12.0
-    write_events("c001", [(2, s(2), 7, 12.0)], 1)
-    run()
-    run()  # idle restart: no new rows, no duplicates
-
-    got = {
-        r.event_id: r.ewma
-        for r in read_sink(spark, sink).collect()
+    buckets = {
+        r.id: r.b
+        for r in spark.range(1, 400)
+        .selectExpr("id", f"pmod(xxhash64(id), {EWMA_BUCKETS}) AS b")
+        .collect()
     }
-    assert got == {0: 4.0, 1: 5.0, 2: 6.75}, got
+    # two keys sharing a bucket, one in a different bucket, and two
+    # keys first seen after the restart: one joins key 7's bucket
+    # state, one opens a bucket of its own
+    shared_a, shared_b = next(
+        (a, b) for a in buckets for b in buckets
+        if a < b and a != 7 and b != 7 and buckets[a] == buckets[b]
+    )
+    other = next(k for k in buckets if buckets[k] not in (buckets[shared_a], buckets[7]))
+    late = next(
+        k for k in buckets
+        if buckets[k] not in (buckets[shared_a], buckets[7], buckets[other])
+    )
+    late_with_7 = next(k for k in buckets if k != 7 and buckets[k] == buckets[7])
+    assert len({buckets[7], buckets[shared_a], buckets[other], buckets[late]}) == 4
+
+    def vals(key, n, t0):
+        # non-dyadic values: rounding and the recursion both matter
+        return [(key, s(t0 + i), 0.1 * (i + 1) + (key or 0) % 7 / 3) for i in range(n)]
+
+    first = [(7, s(0), 4.0), (7, s(1), 8.0)] + vals(shared_a, 3, 0) + vals(
+        shared_b, 2, 0) + vals(other, 4, 1) + vals(None, 3, 0)
+    second = [(7, s(2), 12.0)] + vals(shared_a, 2, 3) + vals(shared_b, 3, 2) + vals(
+        other, 1, 5) + vals(late, 3, 0) + vals(late_with_7, 2, 1) + vals(None, 2, 3)
+    chunks = [
+        [(eid, t, k, v) for eid, (k, t, v) in enumerate(rows, start=off)]
+        for off, rows in ((0, first), (len(first), second))
+    ]
+    all_rows = chunks[0] + chunks[1]
+
+    batch = ewma(spark.createDataFrame(all_rows, schema), alpha=0.25)
+    want = {r.event_id: r.ewma for r in batch.collect()}
+    assert len(want) == len(all_rows)
+    # hand-checked: 4 → 4.0, then .25*8+.75*4=5, and the restart
+    # continues from s=5.0 (.25*12 + .75*5 = 6.75), NOT from 12.0
+    assert [want[0], want[1], want[len(first)]] == [4.0, 5.0, 6.75]
+
+    def scenario(root, shuffle_partitions):
+        replay, sink, cp = (os.path.join(root, d) for d in ("replay", "sink", "cp"))
+        os.makedirs(replay)
+
+        def write_events(name, rows, seq):
+            path = os.path.join(replay, f"{name}.parquet")
+            pd.DataFrame(
+                {
+                    "event_id": [r[0] for r in rows],
+                    "ts": [r[1] for r in rows],
+                    "user_id": pd.array([r[2] for r in rows], dtype="Int64"),
+                    "value": [r[3] for r in rows],
+                }
+            ).to_parquet(
+                path, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
+            )
+            os.utime(path, (1_700_000_000 + seq, 1_700_000_000 + seq))
+
+        def run():
+            stream = file_replay_stream(spark, replay, schema)
+            _run_available_now(ewma_with_state(stream, alpha=0.25), sink, cp)
+
+        prior = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        try:
+            write_events("c000", chunks[0], 0)
+            run()
+            # restart with NEW data: every key continues from its state
+            write_events("c001", chunks[1], 1)
+            run()
+            run()  # idle restart: no new rows, no duplicates
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prior)
+        got = read_sink(spark, sink).collect()
+        assert len(got) == len(all_rows), "duplicate or lost rows"
+        return {r.event_id: r.ewma for r in got}
+
+    for i, partitions in enumerate((spark.conf.get("spark.sql.shuffle.partitions"), 3)):
+        got = scenario(os.path.join(tmpdirs[0], f"run{i}"), partitions)
+        assert got == want, (partitions, got, want)
+
+
+def test_ewma_state_refuses_keys_float64_cannot_separate(spark, tmpdirs):
+    """A chunk holding a NULL key reaches the state function as
+    float64, exact only up to 2**53: a larger key in the NULL key's
+    bucket must fail the query, not merge with a neighbouring key."""
+    import pandas as pd
+
+    from flink_samples_spark.streaming.stateful import EWMA_BUCKETS, ewma_with_state
+
+    replay, sink, cp = tmpdirs
+    bucket = f"pmod(xxhash64(k), {EWMA_BUCKETS})"
+    null_bucket = spark.sql(f"SELECT {bucket} AS b FROM VALUES (CAST(NULL AS BIGINT)) t(k)").first().b
+    big = (
+        spark.range(400)
+        .selectExpr(f"id + {2**60} AS k")
+        .selectExpr("k", f"{bucket} AS b")
+        .filter(f"b = {null_bucket}")
+        .first()
+        .k
+    )
+    path = os.path.join(replay, "c000.parquet")
+    pd.DataFrame(
+        {
+            "event_id": [0, 1],
+            "ts": [BASE, BASE],
+            "user_id": pd.array([big, None], dtype="Int64"),
+            "value": [1.0, 2.0],
+        }
+    ).to_parquet(path, index=False, coerce_timestamps="us")
+    schema = "event_id bigint, ts timestamp, user_id bigint, value double"
+    stream = file_replay_stream(spark, replay, schema)
+    with pytest.raises(Exception, match=r"2\*\*53"):
+        _run_available_now(ewma_with_state(stream), sink, cp)
 
 
 def test_write_replay_files_refuses_large_inputs(spark):

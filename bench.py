@@ -407,8 +407,14 @@ def probe_preflight_gate(spark, budget_s: float | None = None) -> dict:
             gate["result"] = "passed" if attempts == 1 else "passed_after_wait"
             gate.pop("soft_miss", None)
             break
+        # clamp the sleep to the remaining shared budget, and re-check
+        # it before spending another full probe round (tens of seconds
+        # with py_udf + sf_scan_agg) — the pre-suite wait is bounded at
+        # max_wait TOTAL, not max_wait plus a sleep plus a round
         elapsed = time.monotonic() - t0
-        if elapsed >= max_wait:
+        if elapsed < max_wait:
+            time.sleep(min(45.0, max_wait - elapsed))
+        if time.monotonic() - t0 >= max_wait:
             if hard_pass:
                 # hard gate satisfied, soft data target never reached
                 # within budget: proceed (never abort) and say so
@@ -418,14 +424,6 @@ def probe_preflight_gate(spark, budget_s: float | None = None) -> dict:
                 gate["soft_miss"] = data_soft_over
             else:
                 gate["result"] = "timed_out"
-            break
-        # clamp the sleep to the remaining shared budget, and re-check
-        # it before spending another full probe round (tens of seconds
-        # with py_udf + sf_scan_agg) — the pre-suite wait is bounded at
-        # max_wait TOTAL, not max_wait plus a sleep plus a round
-        time.sleep(min(45.0, max_wait - elapsed))
-        if time.monotonic() - t0 >= max_wait:
-            gate["result"] = "timed_out"
             break
     gate["waited_s"] = round(time.monotonic() - t0, 1)
     return gate

@@ -42,7 +42,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from flink_samples_spark.llmops.text import document_fingerprint
-from flink_samples_spark.utils import parallelize_by_key, parallelize_narrow
+from flink_samples_spark.utils import (
+    observe_and_warn,
+    parallelize_by_key,
+    parallelize_narrow,
+)
 
 _LOG = logging.getLogger(__name__)
 
@@ -745,12 +749,9 @@ def _cross_pairs_from_tagged(
 def _observe_hot_buckets(
     df: DataFrame, mode: str, max_bucket: int, n, on_done=None
 ) -> DataFrame:
-    """Attach a ``df.observe`` metric counting hot buckets/docs at
-    this plan point and a daemon waiter that logs the counts once the
-    first action over the plan completes. Zero extra Spark jobs: the
-    metric is computed by the same tasks that run the query. The
-    waiter thread parks on ``Observation.get`` and dies with the
-    process if the plan is never executed.
+    """Count hot buckets/docs at this plan point with
+    :func:`~flink_samples_spark.utils.observe_and_warn` and log them
+    once the first action over the plan completes.
 
     ``on_done`` (optional thunk) runs once the first action finishes —
     the salt path passes the grouped table's ``unpersist`` so cache
@@ -761,55 +762,35 @@ def _observe_hot_buckets(
     parks until the first action (and, for a plan that is never
     executed, until process exit — see the construction-cost note in
     :func:`_bucket_candidate_pairs`)."""
-    import logging
-    import threading
-
-    from pyspark.sql import Observation
-
     hot = n > max_bucket
-    if on_done is None and not _LOG.isEnabledFor(logging.WARNING):
-        return df
-    obs = Observation()
-    out = df.observe(
-        obs,
-        F.sum(hot.cast("long")).alias("nb"),
-        F.sum(F.when(hot, n)).alias("nd"),
-    )
+    consequence = {
+        "salt": "salted into sub-buckets (zero recall loss)",
+        "drop": "DROPPED as boilerplate (pair recall lost for these)",
+        "salt-cold": (
+            "appeared AFTER the build-time probe proved the corpus "
+            "cold — the pruned plan cannot redistribute them, their "
+            "pairs are LOST; the upstream changed between plan "
+            "construction and execution, rebuild the plan"
+        ),
+    }[mode]
 
-    def wait_and_log() -> None:
-        try:
-            m = obs.get  # blocks until the first action finishes
-        except Exception:  # session torn down before any action
-            return
-        finally:
-            if on_done is not None:
-                try:
-                    on_done()
-                except Exception:  # session torn down mid-callback
-                    pass
+    def message(m: dict) -> str | None:
         nb = m.get("nb") or 0
-        if nb:
-            _LOG.warning(
-                "LSH hot buckets (> %d docs): %d buckets / %d doc-rows — %s",
-                max_bucket,
-                nb,
-                m.get("nd") or 0,
-                {
-                    "salt": "salted into sub-buckets (zero recall loss)",
-                    "drop": "DROPPED as boilerplate (pair recall lost for these)",
-                    "salt-cold": (
-                        "appeared AFTER the build-time probe proved the corpus "
-                        "cold — the pruned plan cannot redistribute them, their "
-                        "pairs are LOST; the upstream changed between plan "
-                        "construction and execution, rebuild the plan"
-                    ),
-                }[mode],
-            )
+        if not nb:
+            return None
+        return (
+            f"LSH hot buckets (> {max_bucket} docs): {nb} buckets / "
+            f"{m.get('nd') or 0} doc-rows — {consequence}"
+        )
 
-    threading.Thread(
-        target=wait_and_log, daemon=True, name="lsh-hot-bucket-log"
-    ).start()
-    return out
+    return observe_and_warn(
+        df,
+        _LOG,
+        [F.sum(hot.cast("long")).alias("nb"), F.sum(F.when(hot, n)).alias("nd")],
+        message,
+        on_done=on_done,
+        thread_name="lsh-hot-bucket-log",
+    )
 
 
 def _pairs_within(ds) -> F.Column:

@@ -5,30 +5,14 @@ columns plus typed metadata — Spark shuffles, joins, and aggregates
 BinaryType natively, so the pipeline shape (schema, partitioning,
 Arrow batch transfer) is identical to production.
 
-The decode seam is :func:`decode_features`, a ``mapInPandas`` stage
-with ten codec branches: (a) ``codec='fake'`` — deterministic byte
-stats (real plumbing, fake features) used by tests; (b)
-``codec='ppm'`` — a REAL public codec, binary-PPM (P6) header parse +
-numpy channel means; (c) ``codec='png'`` — a REAL compressed codec,
-PNG 8-bit RGB via stdlib ``zlib`` inflate + per-scanline filter
-reconstruction (None/Sub/Up/Average/Paeth), no PIL needed; (d)
-``codec='wav'`` — a REAL audio codec, RIFF/WAVE 16-bit PCM parse +
-per-channel sample means; (e) ``codec='flac'`` — a REAL COMPRESSED
-LOSSLESS audio codec, FLAC subset-16-bit decode (Rice residuals,
-FIXED/LPC prediction, stereo decorrelation, CRC-8/16 + MD5 checks),
-no libFLAC needed; (f) ``codec='jpeg'`` — a REAL lossy codec,
-baseline JPEG (ITU T.81) Huffman decode + batched numpy IDCT + JFIF
-YCbCr→RGB, no PIL needed; (g) ``codec='y4m'`` — a REAL video
-container, YUV4MPEG2 planar frame iteration; (h) ``codec='gif'`` — a
-REAL palette+LZW codec, animated GIF87a/89a with interlace; (i)
-``codec='mjpeg'`` — a REAL compressed-video codec, MJPEG-in-AVI: the
-RIFF container walk composed with the baseline JPEG decoder per
-frame; (j) ``codec='mrle'`` — a REAL INTER-FRAME video codec,
-Microsoft RLE8-in-AVI: skip/delta opcodes carry pixels forward from
-the previous frame (temporal prediction). Only motion-compensated
-entropy-coded video (H.264/VP9, needs ffmpeg) remains gated behind
-``NotImplementedError`` — clearly marked so nobody mistakes the gate
-for a codec.
+The decode seam is :func:`decode_features`, a ``mapInPandas`` stage.
+``codec='fake'`` gives deterministic byte stats (real plumbing, fake
+features) for tests. Nine REAL public codecs, stdlib + numpy only,
+are rows of one codec table sharing one Arrow batch loop: images
+(PPM P6, PNG, baseline JPEG), audio (16-bit PCM WAV, FLAC), video
+(YUV4MPEG2, animated GIF, MJPEG-in-AVI, inter-frame MS-RLE8-in-AVI).
+Only motion-compensated entropy-coded video (H.264/VP9, needs ffmpeg)
+remains gated behind ``NotImplementedError``.
 
 Scale notes: binary payloads dominate row size — keep
 ``spark.sql.files.maxPartitionBytes`` small enough that a partition
@@ -39,6 +23,7 @@ forward, never the bytes).
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Iterator
 
 import numpy as np
@@ -47,13 +32,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_samples_spark.utils import parallelize_narrow
+from flink_samples_spark.utils import observe_and_warn, parallelize_narrow
+
+_LOG = logging.getLogger(__name__)
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, byte_sum bigint, byte_mean double, head_hash bigint"
 )
 
-# output of the REAL ppm codec branch: header fields + per-channel
+# output of the REAL ppm/png/jpeg codecs: header fields + per-channel
 # means; `valid` marks payloads the parser rejected (corrupt corpus
 # rows become a flagged row, never a dead job)
 PPM_STATS_SCHEMA = (
@@ -61,7 +48,7 @@ PPM_STATS_SCHEMA = (
     "r_mean double, g_mean double, b_mean double"
 )
 
-# output of the REAL wav codec branch: format fields + per-channel
+# output of the REAL wav/flac codecs: format fields + per-channel
 # sample means (stereo; mono payloads surface ch1_mean = NULL) —
 # same corrupt-row contract as the image codecs
 WAV_STATS_SCHEMA = (
@@ -69,7 +56,7 @@ WAV_STATS_SCHEMA = (
     "n_frames bigint, ch0_mean double, ch1_mean double"
 )
 
-# output of the REAL y4m (video) codec branch: stream geometry +
+# output of the REAL y4m (video) codec: stream geometry +
 # per-channel means across all frames — same corrupt-row contract
 Y4M_STATS_SCHEMA = (
     "doc_id bigint, valid boolean, width int, height int, "
@@ -77,7 +64,7 @@ Y4M_STATS_SCHEMA = (
     "y_mean double, cb_mean double, cr_mean double"
 )
 
-# output of the REAL gif codec branch: geometry + palette-mapped
+# output of the REAL gif codec: geometry + palette-mapped
 # channel means across frames, plus r_wsum — a POSITION-WEIGHTED
 # checksum (sum of (global_pixel_index+1) * red). Means are
 # permutation-invariant, so they cannot catch a deinterlace or
@@ -88,7 +75,7 @@ GIF_STATS_SCHEMA = (
     "r_wsum bigint"
 )
 
-# output of the REAL mjpeg (compressed video) codec branch: container
+# output of the REAL mjpeg/mrle (video) codecs: container
 # geometry + per-channel means across all decoded frames, plus
 # r_fwsum — a FRAME-weighted red checksum (sum over frames of
 # (frame_index+1) * frame red total). Means are frame-permutation-
@@ -2926,591 +2913,246 @@ def _make_avi_fixture_encoder():
     return encode
 
 
+# ---- decode_features: one codec table, one batch loop ----
+#
+# Each stats factory runs ONCE on the driver and returns a nested
+# ``stats(buf) -> tuple`` closure whose values follow its schema's
+# columns after (doc_id, valid); a malformed payload raises
+# ValueError. Everything the closure touches is factory-nested, so
+# cloudpickle ships it BY VALUE — executors never need this package
+# importable.
+
+
+def _image_stats(decode):
+    """(w, h, pixels (n, 3)) decoders → PPM_STATS_SCHEMA row."""
+
+    def stats(buf: bytes) -> tuple:
+        w, h, pix = decode(buf)
+        return (w, h, *pix.mean(axis=0, dtype=np.float64))
+
+    return stats
+
+
+def _ppm_pixels():
+    parse_ppm_p6 = _make_ppm_parser()
+
+    def decode(buf: bytes):
+        w, h, _maxval, off = parse_ppm_p6(buf)
+        pix = np.frombuffer(buf, dtype=np.uint8, count=w * h * 3, offset=off)
+        return w, h, pix.reshape(-1, 3)
+
+    return decode
+
+
+def _audio_stats(decode):
+    """(n_channels, rate, samples (n, ch)) decoders → WAV_STATS_SCHEMA
+    row. A zero-frame stream is VALID with NULL means (mean() over an
+    empty axis would warn and produce nan); mono leaves ch1 NULL."""
+
+    def stats(buf: bytes) -> tuple:
+        n_ch, rate, frames = decode(buf)
+        if not len(frames):
+            return (n_ch, rate, 0, None, None)
+        means = frames.mean(axis=0, dtype=np.float64)
+        return (n_ch, rate, len(frames), means[0], means[1] if n_ch >= 2 else None)
+
+    return stats
+
+
+def _video_stats(walk):
+    """``walk(buf) -> (w, h, fps_num, fps_den, rgb frames (n, 3))``
+    → MJPEG_STATS_SCHEMA row: means across frames plus the
+    frame-weighted red checksum. A zero-frame AVI is VALID with NULL
+    stats, checksum included (the wav/y4m/gif no-data parity)."""
+
+    def stats(buf: bytes) -> tuple:
+        w, h, fn, fd, frames = walk(buf)
+        sums = np.zeros(3, dtype=np.float64)
+        wsum = nf = 0
+        for f, pix in enumerate(frames):
+            sums += pix.sum(axis=0, dtype=np.float64)
+            wsum += (f + 1) * int(pix[:, 0].sum(dtype=np.int64))
+            nf += 1
+        if not nf:
+            return (w, h, 0, fn, fd, None, None, None, None)
+        return (w, h, nf, fn, fd, *(sums / (nf * w * h)), wsum)
+
+    return stats
+
+
+def _mjpeg_frames():
+    parse_avi = _make_avi_parser()
+    decode_jpeg_frame = _make_jpeg_decoder()
+
+    def walk(buf: bytes):
+        w, h, fn, fd, frames = parse_avi(buf)
+
+        def rgb():
+            for f, jpeg in enumerate(frames):
+                fw, fh, pix = decode_jpeg_frame(jpeg)
+                if (fw, fh) != (w, h):
+                    raise ValueError(
+                        f"frame {f} is {fw}x{fh}, container declares {w}x{h}"
+                    )
+                yield pix
+
+        return w, h, fn, fd, rgb()
+
+    return walk
+
+
+def _mrle_frames():
+    parse_avi = _make_avi_parser("mrle")
+    play_rle8 = _make_rle8_frame_decoder()
+
+    def walk(buf: bytes):
+        w, h, fn, fd, frames, pal = parse_avi(buf)
+
+        def rgb():
+            # uint8 canvas (indices are < 256 by the palette check):
+            # the worst header the parser admits costs 16.7MB, the
+            # PNG-cap parity the geometry bound promises
+            canvas = np.zeros((h, w), dtype=np.uint8)
+            for data in frames:
+                canvas = play_rle8(data, w, h, canvas, len(pal))
+                yield pal[canvas.reshape(-1)].astype(np.int64)
+
+        return w, h, fn, fd, rgb()
+
+    return walk
+
+
+def _y4m_stats():
+    parse_y4m = _make_y4m_parser()
+
+    def stats(buf: bytes) -> tuple:
+        w, h, fn, fd, frames = parse_y4m(buf)
+        if not len(frames):
+            return (w, h, 0, fn, fd, None, None, None)
+        means = frames.mean(axis=(0, 2), dtype=np.float64)
+        chroma = (None, None) if frames.shape[1] == 1 else (means[1], means[2])
+        return (w, h, len(frames), fn, fd, means[0], *chroma)
+
+    return stats
+
+
+def _gif_stats():
+    decode_gif = _make_gif_decoder()
+
+    def stats(buf: bytes) -> tuple:
+        w, h, frames = decode_gif(buf)
+        if not len(frames):
+            return (w, h, 0, None, None, None, None)
+        means = frames.mean(axis=(0, 1), dtype=np.float64)
+        red = frames[:, :, 0].reshape(-1).astype(np.int64)
+        wsum = int((red * (np.arange(len(red), dtype=np.int64) + 1)).sum())
+        return (w, h, len(frames), *means, wsum)
+
+    return stats
+
+
+# codec -> (stats factory, output schema)
+_CODECS = {
+    "ppm": (lambda: _image_stats(_ppm_pixels()), PPM_STATS_SCHEMA),
+    "png": (lambda: _image_stats(_make_png_decoder()), PPM_STATS_SCHEMA),
+    "jpeg": (lambda: _image_stats(_make_jpeg_decoder()), PPM_STATS_SCHEMA),
+    # zero-frame data chunk / zero-sample stream: VALID, NULL means
+    "wav": (lambda: _audio_stats(_make_wav_parser()), WAV_STATS_SCHEMA),
+    "flac": (lambda: _audio_stats(_make_flac_decoder()), WAV_STATS_SCHEMA),
+    # zero-frame stream: VALID, NULL means; Cmono leaves cb/cr NULL
+    "y4m": (_y4m_stats, Y4M_STATS_SCHEMA),
+    # zero-frame GIF: VALID, NULL means AND checksum
+    "gif": (_gif_stats, GIF_STATS_SCHEMA),
+    # every decoded frame's dimensions must match the container header:
+    # a lying frame makes the payload corrupt (the JPEG decoder's own
+    # pixel cap bounds it first)
+    "mjpeg": (lambda: _video_stats(_mjpeg_frames()), MJPEG_STATS_SCHEMA),
+    # frame 0 plays against an all-zero canvas — the deterministic
+    # baseline the fixture encoder also diffs against
+    "mrle": (lambda: _video_stats(_mrle_frames()), MJPEG_STATS_SCHEMA),
+}
+
+_PANDAS_DTYPES = {
+    "int": "Int32", "bigint": "Int64", "double": "float64", "boolean": "bool"
+}
+
+
+def _decode_batches(stats, schema: str):
+    """The shared mapInPandas loop: ``stats`` per payload, one output
+    column per schema field after doc_id, pandas dtypes read from the
+    schema DDL. A NULL payload or any ``ValueError`` yields
+    ``valid=false`` with every stat NULL — corpus hygiene: one corrupt
+    blob must not kill a 100 TB decode pass. Doubles are rounded to
+    6 places."""
+    fields = [f.split() for f in schema.split(",")][1:]
+    dtypes = [_PANDAS_DTYPES[t] for _, t in fields]
+    rounded = [t == "double" for _, t in fields]
+    invalid = (False,) + (None,) * (len(fields) - 1)
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+
+        for pdf in batches:
+            rows = []
+            for payload in pdf["payload"]:
+                try:
+                    if payload is None:
+                        raise ValueError("null payload")
+                    row = (True, *stats(bytes(payload)))
+                except ValueError:
+                    rows.append(invalid)
+                    continue
+                rows.append(tuple(
+                    round(float(v), 6) if r and v is not None else v
+                    for v, r in zip(row, rounded)
+                ))
+            cols = list(zip(*rows)) or [()] * len(fields)
+            out = {"doc_id": pdf["doc_id"]}
+            for (name, _), col, dtype in zip(fields, cols, dtypes):
+                out[name] = pd.Series(col, dtype=dtype)
+            yield pd.DataFrame(out)
+
+    return decode
+
+
 def decode_features(media: DataFrame, codec: str = "fake") -> DataFrame:
     """Per-payload feature extraction over Arrow batches.
 
     ``codec='fake'``: deterministic byte statistics (real plumbing,
-    fake features) — output schema ``FEATURE_SCHEMA``.
+    fake features) — output schema ``FEATURE_SCHEMA``; a NULL payload
+    gives zero features.
 
-    ``codec='ppm'``: a REAL public codec — binary-PPM (P6) header
-    parse + per-channel pixel means via numpy — output schema
-    ``PPM_STATS_SCHEMA``; malformed payloads yield ``valid=false``
-    rows with NULL stats instead of failing the task (corpus hygiene:
-    one corrupt blob must not kill a 100 TB decode pass).
-
-    ``codec='png'``: a REAL COMPRESSED public codec — PNG 8-bit RGB
-    via stdlib ``zlib`` inflate + per-scanline filter reconstruction
-    (:func:`_make_png_decoder`) — same output schema and same
-    corrupt-payload contract as the ppm branch.
-
-    ``codec='wav'``: a REAL AUDIO codec — RIFF/WAVE 16-bit PCM parse
-    (:func:`_make_wav_parser`) + per-channel numpy sample means —
-    output schema ``WAV_STATS_SCHEMA``, same corrupt-payload contract.
-
-    ``codec='flac'``: a REAL COMPRESSED LOSSLESS audio codec — FLAC
-    subset-16-bit decode (:func:`_make_flac_decoder`: Rice residuals,
-    FIXED/LPC prediction, stereo decorrelation, CRC-8/CRC-16 + MD5
-    verification) + the same per-channel means — output schema
-    ``WAV_STATS_SCHEMA`` (the stats are codec-independent), same
-    corrupt-payload contract.
-
-    ``codec='jpeg'``: a REAL LOSSY codec — baseline JPEG (T.81) via
-    stdlib Huffman decode + batched numpy IDCT + JFIF color transform
-    (:func:`_make_jpeg_decoder`) — same output schema and corrupt-
-    payload contract as the ppm/png branches.
-
-    ``codec='y4m'``: a REAL VIDEO container — YUV4MPEG2 uncompressed
-    planar stream parse with per-frame iteration
-    (:func:`_make_y4m_parser`) + per-channel means across frames —
-    output schema ``Y4M_STATS_SCHEMA``, same corrupt-payload contract.
-
-    ``codec='gif'``: a REAL PALETTE+LZW codec — GIF87a/89a decode
-    (:func:`_make_gif_decoder`) with animation frames, interlace and
-    local-color-table support — output schema ``GIF_STATS_SCHEMA``
-    (means + an order-sensitive weighted checksum), same
-    corrupt-payload contract.
-
-    ``codec='mjpeg'``: a REAL COMPRESSED VIDEO codec — MJPEG-in-AVI,
-    composing the RIFF container walk (:func:`_make_avi_parser`) with
-    the baseline JPEG decoder per frame — output schema
-    ``MJPEG_STATS_SCHEMA`` (geometry + frame rate + means + a
-    frame-order-sensitive weighted checksum), same corrupt-payload
-    contract. Every decoded frame's dimensions must match the
-    container header (a lying frame makes the payload corrupt, and
-    the JPEG decoder's own pixel cap bounds it first).
-
-    ``codec='mrle'``: a REAL INTER-FRAME video codec — Microsoft
-    RLE8-in-AVI: the RIFF container walk (palette-parsing variant)
-    composed with the BI_RLE8 opcode playback
-    (:func:`_make_rle8_frame_decoder`), where skip opcodes carry
-    pixels forward from the PREVIOUS frame — temporal prediction.
-    Output schema ``MJPEG_STATS_SCHEMA`` (the stats are
-    codec-independent), same corrupt-payload contract. Frame 0 plays
-    against an all-zero canvas (the deterministic baseline the
-    fixture encoder also diffs against).
+    Every other supported codec is a row of ``_CODECS``: its stats
+    factory runs once on the driver and :func:`_decode_batches` maps
+    it over the payloads, emitting the codec's schema with a ``valid``
+    flag (NULL or malformed payloads become ``valid=false`` rows with
+    NULL stats). The count of invalid rows is observed on the output
+    and logged as one WARNING after the first action when non-zero.
 
     Any other codec raises — motion-compensated entropy-coded video
     (H.264, VP9, ...) needs ffmpeg, absent in this environment.
     """
-    if codec == "mrle":
-        parse_avi = _make_avi_parser("mrle")
-        play_rle8 = _make_rle8_frame_decoder()
-
-        def decode_mrle_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "fn", "fd", "r", "g", "b", "ws")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, fn, fd, frames, pal = parse_avi(bytes(payload))
-                        # uint8 canvas (indices are < 256 by the
-                        # palette check): the worst header the parser
-                        # admits costs 16.7MB, the PNG-cap parity the
-                        # geometry bound above promises
-                        canvas = np.zeros((h, w), dtype=np.uint8)
-                        sums = np.zeros(3, dtype=np.float64)
-                        wsum = 0
-                        for f, data in enumerate(frames):
-                            canvas = play_rle8(data, w, h, canvas, len(pal))
-                            rgb = pal[canvas.reshape(-1)].astype(np.int64)
-                            sums += rgb.sum(axis=0)
-                            wsum += (f + 1) * int(rgb[:, 0].sum())
-                        nf = len(frames)
-                        means = sums / (nf * w * h) if nf else None
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(nf)
-                        rows["fn"].append(fn)
-                        rows["fd"].append(fd)
-                        for c, k in zip((0, 1, 2), ("r", "g", "b")):
-                            rows[k].append(
-                                round(float(means[c]), 6)
-                                if means is not None
-                                else None
-                            )
-                        rows["ws"].append(wsum if nf else None)
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "fps_num": pd.Series(rows["fn"], dtype="Int32"),
-                        "fps_den": pd.Series(rows["fd"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                        "r_fwsum": pd.Series(rows["ws"], dtype="Int64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_mrle_batches, MJPEG_STATS_SCHEMA
+    if codec in _CODECS:
+        factory, schema = _CODECS[codec]
+        decoded = parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
+            _decode_batches(factory(), schema), schema
         )
-    if codec == "mjpeg":
-        parse_avi = _make_avi_parser()
-        decode_jpeg_frame = _make_jpeg_decoder()
 
-        def decode_mjpeg_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
+        def message(m: dict) -> str | None:
+            n = m.get("n_invalid") or 0
+            return f"decode_features codec={codec}: {n} invalid payloads" if n else None
 
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "fn", "fd", "r", "g", "b", "ws")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, fn, fd, frames = parse_avi(bytes(payload))
-                        sums = np.zeros(3, dtype=np.float64)
-                        wsum = 0
-                        for f, jpeg in enumerate(frames):
-                            fw, fh, pix = decode_jpeg_frame(jpeg)
-                            if (fw, fh) != (w, h):
-                                raise ValueError(
-                                    f"frame {f} is {fw}x{fh}, container "
-                                    f"declares {w}x{h}"
-                                )
-                            sums += pix.sum(axis=0, dtype=np.float64)
-                            wsum += (f + 1) * int(
-                                pix[:, 0].sum(dtype=np.int64)
-                            )
-                        nf = len(frames)
-                        # zero-frame AVI: VALID with NULL stats incl.
-                        # the checksum (wav/y4m/gif no-data parity)
-                        means = sums / (nf * w * h) if nf else None
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(nf)
-                        rows["fn"].append(fn)
-                        rows["fd"].append(fd)
-                        for c, k in zip((0, 1, 2), ("r", "g", "b")):
-                            rows[k].append(
-                                round(float(means[c]), 6)
-                                if means is not None
-                                else None
-                            )
-                        rows["ws"].append(wsum if nf else None)
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "fps_num": pd.Series(rows["fn"], dtype="Int32"),
-                        "fps_den": pd.Series(rows["fd"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                        "r_fwsum": pd.Series(rows["ws"], dtype="Int64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_mjpeg_batches, MJPEG_STATS_SCHEMA
-        )
-    if codec == "gif":
-        decode_gif = _make_gif_decoder()
-
-        def decode_gif_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "r", "g", "b", "ws")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, frames = decode_gif(bytes(payload))
-                        means = (
-                            frames.mean(axis=(0, 1), dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        # zero-frame GIF: NULL all stats incl. the
-                        # checksum, matching the wav/y4m no-data rows
-                        red = frames[:, :, 0].reshape(-1).astype(np.int64)
-                        wsum = (
-                            int((red * (np.arange(len(red), dtype=np.int64) + 1))
-                                .sum())
-                            if len(frames)
-                            else None
-                        )
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(len(frames))
-                        for c, k in zip((0, 1, 2), ("r", "g", "b")):
-                            rows[k].append(
-                                round(float(means[c]), 6)
-                                if means is not None
-                                else None
-                            )
-                        rows["ws"].append(wsum)
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                        "r_wsum": pd.Series(rows["ws"], dtype="Int64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_gif_batches, GIF_STATS_SCHEMA
-        )
-    if codec == "y4m":
-        parse_y4m = _make_y4m_parser()
-
-        def decode_y4m_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                keys = ("valid", "w", "h", "nf", "fn", "fd", "y", "cb", "cr")
-                rows = {k: [] for k in keys}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, fn, fd, frames = parse_y4m(bytes(payload))
-                        # zero-frame stream is VALID with NULL means
-                        # (same guard as the WAV branch: mean() over
-                        # an empty axis would warn and produce nan)
-                        means = (
-                            frames.mean(axis=(0, 2), dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        mono = frames.shape[1] == 1
-                        rows["valid"].append(True)
-                        rows["w"].append(w)
-                        rows["h"].append(h)
-                        rows["nf"].append(len(frames))
-                        rows["fn"].append(fn)
-                        rows["fd"].append(fd)
-                        rows["y"].append(
-                            round(float(means[0]), 6) if means is not None else None
-                        )
-                        rows["cb"].append(
-                            round(float(means[1]), 6)
-                            if means is not None and not mono
-                            else None
-                        )
-                        rows["cr"].append(
-                            round(float(means[2]), 6)
-                            if means is not None and not mono
-                            else None
-                        )
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in keys[1:]:
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["w"], dtype="Int32"),
-                        "height": pd.Series(rows["h"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "fps_num": pd.Series(rows["fn"], dtype="Int32"),
-                        "fps_den": pd.Series(rows["fd"], dtype="Int32"),
-                        "y_mean": pd.Series(rows["y"], dtype="float64"),
-                        "cb_mean": pd.Series(rows["cb"], dtype="float64"),
-                        "cr_mean": pd.Series(rows["cr"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_y4m_batches, Y4M_STATS_SCHEMA
-        )
-    if codec == "jpeg":
-        decode_jpeg = _make_jpeg_decoder()
-
-        def decode_jpeg_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "width", "height", "r", "g", "b")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, pix = decode_jpeg(bytes(payload))
-                        means = pix.mean(axis=0, dtype=np.float64)
-                        rows["valid"].append(True)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        for c, m in zip(("r", "g", "b"), means):
-                            rows[c].append(round(float(m), 6))
-                    except ValueError:
-                        rows["valid"].append(False)
-                        rows["width"].append(None)
-                        rows["height"].append(None)
-                        for c in ("r", "g", "b"):
-                            rows[c].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["width"], dtype="Int32"),
-                        "height": pd.Series(rows["height"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_jpeg_batches, PPM_STATS_SCHEMA
-        )
-    if codec == "flac":
-        decode_flac = _make_flac_decoder()
-
-        def decode_flac_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "nc", "rate", "nf", "c0", "c1")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        n_ch, rate, frames = decode_flac(bytes(payload))
-                        # zero-sample stream: VALID with NULL means
-                        # (the wav branch's no-data parity)
-                        means = (
-                            frames.mean(axis=0, dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        rows["valid"].append(True)
-                        rows["nc"].append(n_ch)
-                        rows["rate"].append(rate)
-                        rows["nf"].append(len(frames))
-                        rows["c0"].append(
-                            round(float(means[0]), 6) if means is not None else None
-                        )
-                        rows["c1"].append(
-                            round(float(means[1]), 6)
-                            if means is not None and n_ch >= 2
-                            else None
-                        )
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in ("nc", "rate", "nf", "c0", "c1"):
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "n_channels": pd.Series(rows["nc"], dtype="Int32"),
-                        "sample_rate": pd.Series(rows["rate"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "ch0_mean": pd.Series(rows["c0"], dtype="float64"),
-                        "ch1_mean": pd.Series(rows["c1"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_flac_batches, WAV_STATS_SCHEMA
-        )
-    if codec == "wav":
-        parse_wav = _make_wav_parser()
-
-        def decode_wav_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "nc", "rate", "nf", "c0", "c1")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        n_ch, rate, frames = parse_wav(bytes(payload))
-                        # a zero-frame data chunk is VALID (means are
-                        # NULL, not nan) — mean() over it would warn
-                        # and produce nan, so guard before computing
-                        means = (
-                            frames.mean(axis=0, dtype=np.float64)
-                            if len(frames)
-                            else None
-                        )
-                        rows["valid"].append(True)
-                        rows["nc"].append(n_ch)
-                        rows["rate"].append(rate)
-                        rows["nf"].append(len(frames))
-                        rows["c0"].append(
-                            round(float(means[0]), 6) if means is not None else None
-                        )
-                        rows["c1"].append(
-                            round(float(means[1]), 6)
-                            if means is not None and n_ch >= 2
-                            else None
-                        )
-                    except ValueError:
-                        rows["valid"].append(False)
-                        for k in ("nc", "rate", "nf", "c0", "c1"):
-                            rows[k].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "n_channels": pd.Series(rows["nc"], dtype="Int32"),
-                        "sample_rate": pd.Series(rows["rate"], dtype="Int32"),
-                        "n_frames": pd.Series(rows["nf"], dtype="Int64"),
-                        "ch0_mean": pd.Series(rows["c0"], dtype="float64"),
-                        "ch1_mean": pd.Series(rows["c1"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_wav_batches, WAV_STATS_SCHEMA
-        )
-    if codec == "png":
-        decode_png = _make_png_decoder()
-
-        def decode_png_batches(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "width", "height", "r", "g", "b")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, pix = decode_png(bytes(payload))
-                        means = pix.mean(axis=0, dtype=np.float64)
-                        rows["valid"].append(True)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        for c, m in zip(("r", "g", "b"), means):
-                            rows[c].append(round(float(m), 6))
-                    except ValueError:
-                        rows["valid"].append(False)
-                        rows["width"].append(None)
-                        rows["height"].append(None)
-                        for c in ("r", "g", "b"):
-                            rows[c].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["width"], dtype="Int32"),
-                        "height": pd.Series(rows["height"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_png_batches, PPM_STATS_SCHEMA
-        )
-    if codec == "ppm":
-        parse_ppm_p6 = _make_ppm_parser()
-
-        def decode_ppm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                rows = {k: [] for k in ("valid", "width", "height", "r", "g", "b")}
-                for payload in pdf["payload"]:
-                    try:
-                        if payload is None:
-                            raise ValueError("null payload")
-                        w, h, _maxval, off = parse_ppm_p6(bytes(payload))
-                        pix = np.frombuffer(
-                            payload, dtype=np.uint8, count=w * h * 3, offset=off
-                        ).reshape(-1, 3)
-                        means = pix.mean(axis=0, dtype=np.float64)
-                        rows["valid"].append(True)
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        for c, m in zip(("r", "g", "b"), means):
-                            rows[c].append(round(float(m), 6))
-                    except ValueError:
-                        rows["valid"].append(False)
-                        rows["width"].append(None)
-                        rows["height"].append(None)
-                        for c in ("r", "g", "b"):
-                            rows[c].append(None)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "valid": pd.Series(rows["valid"], dtype="bool"),
-                        "width": pd.Series(rows["width"], dtype="Int32"),
-                        "height": pd.Series(rows["height"], dtype="Int32"),
-                        "r_mean": pd.Series(rows["r"], dtype="float64"),
-                        "g_mean": pd.Series(rows["g"], dtype="float64"),
-                        "b_mean": pd.Series(rows["b"], dtype="float64"),
-                    }
-                )
-
-        return parallelize_narrow(media.select("doc_id", "payload")).mapInPandas(
-            decode_ppm, PPM_STATS_SCHEMA
+        return observe_and_warn(
+            decoded,
+            _LOG,
+            [F.sum((~F.col("valid")).cast("long")).alias("n_invalid")],
+            message,
+            thread_name="decode-invalid-log",
         )
     if codec != "fake":
         raise NotImplementedError(
-            f"codec {codec!r}: only 'fake' (byte stats), 'ppm' (real P6 "
-            "parse), 'png' (real zlib inflate + filter reconstruction), "
-            "'wav' (real RIFF/PCM parse), 'flac' (real Rice/FIXED/LPC "
-            "lossless decode), 'jpeg' (real baseline Huffman+IDCT "
-            "decode), 'y4m' (real uncompressed video container), 'gif' "
-            "(real palette+LZW decode), 'mjpeg' (real AVI walk + "
-            "per-frame JPEG decode), and 'mrle' (real inter-frame RLE8 "
-            "playback with carry-forward) run in this environment; "
-            "plug ffmpeg into decode_features here for "
+            f"codec {codec!r}: the real codecs are {sorted(_CODECS)} (plus "
+            "'fake' byte stats); plug ffmpeg into decode_features here for "
             "motion-compensated entropy-coded video (H.264/VP9/...)"
         )
 

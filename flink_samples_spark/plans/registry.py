@@ -67,20 +67,29 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # Round-14 allocation (manifest after r13: 210 of 210 ever-green;
     # latest-green histogram r9:21 r10:44 r11:46 r12:49 r13:50).
     # Optimization-round priority #1 is certifying the latest diff:
-    # the eight queries whose physical plans recent changes touch
-    # (bucketed EWMA state; keyed sketch caches; the SQL ingestion
-    # fast path) lead the window so the oracle gate re-certifies
-    # exactly what changed.  Then the 21-query r9
-    # backlog the r13 comment promised (the TPC-H-shape remainder),
-    # the flagship canary, one sentinel for each family that would
-    # otherwise have no seat, and 15 seats burning down the r10
-    # cohort biased to the heavy tier-X paths (multimodal decode
-    # family, streaming dedup, kmeans/int8 ANN).  The rest of the r10
-    # cohort is enumerated at the bottom as round 15's backlog.
+    # the eighteen queries whose physical plans recent changes touch
+    # (the decode_features codec table; bucketed EWMA state; keyed
+    # sketch caches; the SQL ingestion fast path) lead the window so
+    # the oracle gate re-certifies exactly what changed.  Then the
+    # 21-query r9 backlog the r13 comment promised (the TPC-H-shape
+    # remainder), the flagship canary, one sentinel for each family
+    # that would otherwise have no seat, and 5 seats burning down the
+    # r10 cohort.  The rest of the r10 cohort is enumerated at the
+    # bottom as round 15's backlog.
     # Rotated-out ever-green queries keep local regression safety via
     # tests/test_catalog.py (identical row+schema+hash DuckDB
     # comparison, catalog-wide).
     # ---- changed-plan regression set ----
+    "q_multimodal_features",    # decode_features: codec table + shared batch loop
+    "q_multimodal_decode",
+    "q_multimodal_decode_png",
+    "q_multimodal_decode_wav",
+    "q_multimodal_decode_flac",
+    "q_multimodal_decode_rle",
+    "q_multimodal_decode_jpeg",
+    "q_multimodal_decode_y4m",
+    "q_multimodal_decode_gif",
+    "q_multimodal_decode_mjpeg",
     "q_stream_ewma",            # bucketed EWMA state (one Python call per bucket)
     "q_stream_dedup_index",     # SQL ingestion fast path (bench headliner)
     "q_dedup_near",             # keyed sketch cache
@@ -121,34 +130,24 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "q_topk_per_group",         # 2.6 top-k
     "q_union_all",              # 2.7 set ops
     "q_sql_cte",                # SQL entry
-    # ---- r10-stale fills (15 of the remaining 44; heavy tier-X
-    # ---- corpus ops, the whole multimodal decode family, streaming
-    # ---- dedup, clustering/ANN, SQL/temporal reps) ----
-    "q_multimodal_decode_gif",
-    "q_multimodal_decode_jpeg",
-    "q_multimodal_decode_mjpeg",
-    "q_multimodal_decode_rle",
-    "q_multimodal_decode_wav",
-    "q_multimodal_decode_y4m",
-    "q_lm_score",
-    "q_training_pipeline",
+    # ---- r10-stale fills (streaming dedup, SQL/temporal reps) ----
     "q_stream_dedup",
-    "q_embed_kmeans",
-    "q_sim_topk_int8",
     "q_udf_arrow",
     "q_scan_json",
     "q_join_temporal",
     "q_pivot",
-    # Round-15 backlog (the r10 remainder, 29): q_agg_approx_quantile
+    # Round-15 backlog (the r10 remainder, 32): q_agg_approx_quantile
     # q_agg_bitmap_distinct q_agg_histogram q_budget_select
     # q_data_quality q_fn_array2 q_fn_bitwise q_fn_date2 q_fn_regex
     # q_fn_try q_fn_variant q_intersect_all q_join_asof_tol q_lang_id
-    # q_mix_temperature q_multimodal_features q_multimodal_framesample
+    # q_mix_temperature q_multimodal_framesample
     # q_pii_redact q_quality_repetition q_sample_domain_cap
     # q_sql_grouping_sets q_sql_scalar_subquery q_unpivot, plus the six
     # fills that gave up their seats to the family sentinels and
     # q_stream_ewma: q_curation_v2 q_dedup_span q_dedup_within
-    # q_quality_score q_scd2 q_tokenize_vocab.
+    # q_quality_score q_scd2 q_tokenize_vocab, and the four that gave
+    # theirs to the decode_features queries: q_lm_score
+    # q_training_pipeline q_embed_kmeans q_sim_topk_int8.
 )
 
 

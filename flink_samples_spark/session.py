@@ -34,6 +34,29 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set,
+    else the smaller of 24g and 60% of the host's MemTotal (24g where
+    ``/proc/meminfo`` is unreadable). Single-JVM local mode: the
+    "driver" heap IS the executor heap for all local[N] threads. 8g
+    GC-thrashed a whole bench suite on a 32-core host (measured 4×
+    suite slowdown) and 24g kept suite timings equal to
+    queries-in-isolation there, but a heap larger than the host lets
+    the JVM grow into memory the machine does not have. Real clusters
+    size executors instead."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            total_kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, ValueError, IndexError, StopIteration):
+        return "24g"
+    return f"{min(24 * 1024, total_kib * 6 // 10 // 1024)}m"
+
+
 def get_spark(
     app_name: str = _DEF_APP,
     master: str | None = None,
@@ -66,12 +89,7 @@ def get_spark(
         .config("spark.sql.parquet.enableVectorizedReader", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        # Single-JVM local mode: the "driver" heap IS the executor heap
-        # for all local[N] threads. 8g GC-thrashes once a whole bench
-        # suite's shuffles+broadcasts accumulate (measured 4× suite
-        # slowdown); 24g keeps full-suite timings equal to
-        # queries-in-isolation. Real clusters size executors instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

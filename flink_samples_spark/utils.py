@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import logging
+import threading
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -89,3 +93,43 @@ def pin_plan_with_confs(df: DataFrame, confs: dict[str, str]) -> DataFrame:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def observe_and_warn(
+    df: DataFrame,
+    log: logging.Logger,
+    metrics: list[Column],
+    message: Callable[[dict], str | None],
+    on_done: Callable[[], object] | None = None,
+    thread_name: str = "observe-waiter",
+) -> DataFrame:
+    """Attach a ``df.observe`` of ``metrics`` and a daemon waiter that,
+    once the first action over the plan completes, runs ``on_done``
+    and then logs ``message(values)`` as a WARNING unless it returns
+    None. Zero extra Spark jobs: the metrics are computed by the same
+    tasks that run the query. The waiter parks on ``Observation.get``
+    and dies with the process if the plan is never executed. With no
+    ``on_done`` and WARNING disabled on ``log``, ``df`` is returned
+    as is and no thread spawns."""
+    if on_done is None and not log.isEnabledFor(logging.WARNING):
+        return df
+    obs = Observation()
+    out = df.observe(obs, *metrics)
+
+    def wait_and_log() -> None:
+        try:
+            values = obs.get  # blocks until the first action finishes
+        except Exception:  # session torn down before any action
+            return
+        finally:
+            if on_done is not None:
+                try:
+                    on_done()
+                except Exception:  # session torn down mid-callback
+                    pass
+        text = message(values)
+        if text:
+            log.warning(text)
+
+    threading.Thread(target=wait_and_log, daemon=True, name=thread_name).start()
+    return out

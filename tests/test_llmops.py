@@ -136,6 +136,34 @@ def test_ppm_decode_known_image_and_corrupt_payloads(spark):
         assert got[k].width is None and got[k].r_mean is None
 
 
+def test_invalid_payload_count_is_logged(spark, caplog):
+    """A corrupt payload must not stay a silent valid=false row: the
+    decode output observes the invalid count and, after the first
+    action, logs one WARNING naming the codec and the count."""
+    import logging
+    import time
+
+    good = b"P6\n2 1\n255\n" + bytes(range(6))
+    rows = [(1, good), (2, b"P5\n2 1\n255\n" + bytes(6)), (3, b"P6\n2 1\n255\n")]
+    media = spark.createDataFrame(rows, "doc_id bigint, payload binary")
+    logger = "flink_samples_spark.llmops.multimodal"
+    want = "decode_features codec=ppm: 2 invalid payloads"
+
+    def logged() -> int:
+        # earlier tests' waiters may still log their own counts here
+        return sum(
+            r.name == logger and r.getMessage() == want for r in caplog.records
+        )
+
+    with caplog.at_level(logging.WARNING, logger=logger):
+        got = decode_features(media, codec="ppm").collect()
+        assert sorted(r.valid for r in got) == [False, False, True]
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline and not logged():
+            time.sleep(0.1)  # the waiter logs from its own thread
+    assert logged() == 1
+
+
 def test_png_decode_known_image_and_corrupt_payloads(spark):
     """The compressed-codec branch: a hand-built 2x2 PNG (one filtered
     scanline per type exercised across docs elsewhere; here Up + Sub)

@@ -19,6 +19,14 @@ compositions (shuffle-conscious; see each docstring):
 - :func:`simhash_signatures` — 64-bit SimHash; near-dups differ in
   few bits. Join on rotated prefix buckets at scale.
 
+Incremental (ingestion) dedup against a stored signature index has
+four entry points: :func:`build_dedup_index` signs a batch once,
+:func:`read_prior_index` reads the prior batches' index partitions,
+:func:`fused_pairs_via_views` emits within-batch and batch×index
+pairs from one bucketing shuffle (q_stream_dedup_index), and
+:func:`dedup_against_index` emits batch×index pairs with sides
+tracked, so the two may share doc_ids (q_dedup_incremental).
+
 Skew note (100 TB): boilerplate shingles create hot LSH buckets. The
 bucketed paths handle buckets over ``max_bucket`` docs by
 triangle-salting them into bounded sub-buckets by default (exact same
@@ -457,10 +465,11 @@ _PAIR_ARRAY_TYPE = "array<struct<doc_a:bigint,doc_b:bigint>>"
 
 
 def _sql_pairs_within(arr: str) -> str:
-    """SQL transliteration of :func:`_pairs_within` (all a<b pairs of
-    an ascending-sorted array column) — must stay expression-for-
-    expression identical so the SQL and DataFrame ingestion paths
-    produce bit-identical pair sets (pinned by pytest)."""
+    """All (a<b) pairs of an ASCENDING-sorted array column ``arr``, as
+    array<struct<doc_a,doc_b>>: for element i, pair it with every
+    later element. Pure codegen; the caller bounds the array size.
+    The single definition: :func:`_pairs_within` parses this string
+    for the DataFrame paths."""
     return (
         f"flatten(transform({arr}, (x, i) -> "
         f"transform(slice({arr}, i + 2, size({arr})), "
@@ -468,13 +477,20 @@ def _sql_pairs_within(arr: str) -> str:
     )
 
 
-def _sql_salted_hot_cte(hot_from: str, n_col: str, list_col: str, max_bucket: int) -> str:
+def _sql_jaccard(a: str, b: str) -> str:
+    """THE exact-Jaccard expression over two shingle-hash array columns
+    (the single definition; every verify path uses it): hash-set
+    intersection in the JVM, |A∩B| / |A∪B| rounded to 6 places."""
+    inter = f"size(array_intersect({a}, {b}))"
+    return f"round(CAST({inter} AS DOUBLE) / (size({a}) + size({b}) - {inter}), 6)"
+
+
+def _sql_salted_hot_cte(hot_view: str, n_col: str, list_col: str, max_bucket: int) -> str:
     """SQL transliteration of :func:`_salted_hot_pairs` as a CTE chain
     ending in ``hot_pairs(p)``: triangle-salted redistribution of
     buckets over ``max_bucket`` docs (exact pair set, bounded tasks).
-    ``hot_from`` is a FROM-clause fragment selecting
-    (band, band_hash, ``n_col``, ``list_col``) rows already filtered
-    to n > max_bucket."""
+    ``hot_view`` holds (band, band_hash, ``n_col``, ``list_col``) rows
+    already filtered to n > max_bucket."""
     cross = (
         "flatten(transform(lo, x -> transform(hi, y -> "
         "named_struct('doc_a', least(x, y), 'doc_b', greatest(x, y)))))"
@@ -484,7 +500,7 @@ def _sql_salted_hot_cte(hot_from: str, n_col: str, list_col: str, max_bucket: in
       SELECT band, band_hash,
              CAST(ceil({n_col} / {max_bucket}) AS INT) AS s,
              explode({list_col}) AS doc_id
-      FROM {hot_from}
+      FROM {hot_view}
     ),
     tagged AS (
       SELECT band, band_hash, doc_id, s,
@@ -516,36 +532,11 @@ def _sql_salted_hot_cte(hot_from: str, n_col: str, list_col: str, max_bucket: in
     )"""
 
 
-def _sql_verify_tail(threshold: float, sk_body: str) -> str:
-    """SQL transliteration of :func:`_verify_pairs` + :func:`_jaccard_tail`
-    over a ``cands(doc_a, doc_b)`` CTE: merge-hinted sketch attaches
-    (never broadcast — see _verify_pairs for the OOM measurements) and
-    the single exact-Jaccard expression."""
-    return f""",
-    sk AS ({sk_body})
-    SELECT doc_a, doc_b, jaccard FROM (
-      SELECT /*+ MERGE(l), MERGE(r) */
-             c.doc_a AS doc_a, c.doc_b AS doc_b,
-             round(CAST(size(array_intersect(l.shingle_hashes, r.shingle_hashes)) AS DOUBLE)
-                   / (size(l.shingle_hashes) + size(r.shingle_hashes)
-                      - size(array_intersect(l.shingle_hashes, r.shingle_hashes))), 6)
-               AS jaccard
-      FROM cands c
-      JOIN sk l ON c.doc_a = l.doc_id
-      JOIN sk r ON c.doc_b = r.doc_id
-    )
-    WHERE jaccard >= {threshold!r}"""
-
-
-def fused_grouped_sql(batch_view: str, index_view: str | None) -> str:
-    """Standalone SQL for the fused bucketing aggregate — the
-    ``grouped`` CTE of :func:`fused_pairs_sql` as its own statement,
-    so a caller can materialize it ONCE (persist + temp view) and
-    hand the view name to ``fused_pairs_sql(..., grouped_view=...)``:
-    the cold and hot branches then share one execution of the
-    bucketing shuffle exactly like the DataFrame form's persist
-    (measured: the inline-CTE form re-runs the final aggregate per
-    branch, ~0.2 s/batch at sf0.1)."""
+def _fused_grouped_sql(batch_view: str, index_view: str | None) -> str:
+    """Statement 1 of :func:`fused_pairs_via_views`: the bucketing
+    aggregate over the packed band arrays. Without an index:
+    (band, band_hash, n_docs, ds); with one: (band, band_hash,
+    da = index docs, db = batch docs, nb = size(db))."""
     if index_view is None:
         return f"""
         SELECT band, band_hash,
@@ -573,65 +564,41 @@ def fused_grouped_sql(batch_view: str, index_view: str | None) -> str:
     )"""
 
 
-def fused_pairs_sql(
+def _fused_pairs_sql(
     batch_view: str,
     index_view: str | None,
-    threshold: float = 0.8,
-    max_bucket: int = 1000,
-    max_bucket_pairs: int = 250_000,
-    grouped_view: str | None = None,
+    threshold: float,
+    max_bucket: int,
+    max_bucket_pairs: int,
 ) -> str:
-    """ONE SQL string computing exactly what
-    :func:`fused_pairs_with_index` computes (``index_view is None`` ≡
-    ``index=None``), over temp views holding the packed index frames.
+    """Statement 2 of :func:`fused_pairs_via_views`: pair expansion
+    and verify over the ``{batch_view}_grouped`` and
+    ``{batch_view}_grouped_hot`` views. Per bucket (da = index docs,
+    db = batch docs):
 
-    WHY (r14 optimization, guide §1/§5 — driver latency is part of
-    the query): the per-micro-batch ingestion loop previously rebuilt
-    the fused-pairs plan through ~70 DataFrame/Column py4j calls, each
-    re-analyzing a growing tree — ~0.5-0.6 s of pure driver time per
-    batch before any task ran. Registering the two frames as temp
-    views and submitting this ONE statement moves parsing + analysis
-    into a single JVM round trip. The pair set is bit-identical to the
-    DataFrame form (pinned by
-    ``test_fused_pairs_sql_matches_dataframe_form``); the plan differs
-    only in that the grouped-bucket aggregate is a CTE consumed by the
-    cold and hot branches (shuffle reused via ReusedExchange) instead
-    of a persist — the hot branch is exercised only by over-cap
-    buckets either way.
-
-    Trade-off, documented: the DataFrame form's ``df.observe``
-    hot-bucket monitor cannot ride a SQL string, so this fast path
-    logs nothing when buckets salt. The SALTING itself is identical
-    (exact pair set, bounded tasks) — only the warning log is absent;
-    callers that need the in-flight monitor use
-    :func:`fused_pairs_with_index`.
-
-    Same doc_id-disjointness REQUIREMENT as the DataFrame form when
-    ``index_view`` is given (the single verify join resolves both pair
-    ends against the union sketch frame)."""
-    empty = f"CAST(array() AS {_PAIR_ARRAY_TYPE})"
-    grouped_cte = (
-        f"grouped AS ({fused_grouped_sql(batch_view, index_view)}),"
-        if grouped_view is None
-        else f"grouped AS (SELECT * FROM {grouped_view}),"
-    )
+    - within pairs come from ``db`` alone, so the ``max_bucket`` cap
+      and the triangle-salt redistribution of over-cap buckets see
+      exactly the rows a within-batch run would group;
+    - cross pairs are da×db, dropped when |da|·|db| exceeds
+      ``max_bucket_pairs`` (the cap of :func:`_cross_pairs_from_tagged`;
+      bigint product, so a hot bucket cannot overflow int32);
+    - the distinct runs over the union: within pairs have both ends in
+      the batch and cross pairs one end in the index, so no pair can
+      appear in both sets."""
+    grouped, hot = f"{batch_view}_grouped", f"{batch_view}_grouped_hot"
     if index_view is None:
         cold = f"""
-        cold AS (
           SELECT explode({_sql_pairs_within('ds')}) AS p
-          FROM grouped WHERE n_docs >= 2 AND n_docs <= {max_bucket}
-        ),"""
-        hot = _sql_salted_hot_cte(
-            f"grouped WHERE n_docs > {max_bucket}", "n_docs", "ds", max_bucket
-        )
+          FROM {grouped} WHERE n_docs >= 2 AND n_docs <= {max_bucket}"""
+        hot_cte = _sql_salted_hot_cte(hot, "n_docs", "ds", max_bucket)
         sk_body = f"SELECT doc_id, shingle_hashes FROM {batch_view}"
     else:
+        empty = f"CAST(array() AS {_PAIR_ARRAY_TYPE})"
         cross_arr = (
             "flatten(transform(da, x -> transform(db, y -> "
             "named_struct('doc_a', x, 'doc_b', y))))"
         )
         cold = f"""
-        cold AS (
           SELECT explode(concat(
             CASE WHEN nb >= 2 AND nb <= {max_bucket}
                  THEN {_sql_pairs_within('db')} ELSE {empty} END,
@@ -639,28 +606,32 @@ def fused_pairs_sql(
                       AND CAST(size(da) AS BIGINT) * CAST(nb AS BIGINT)
                           <= {max_bucket_pairs}
                  THEN {cross_arr} ELSE {empty} END
-          )) AS p FROM grouped
-        ),"""
-        hot = _sql_salted_hot_cte(
-            f"grouped WHERE nb > {max_bucket}", "nb", "db", max_bucket
-        )
+          )) AS p FROM {grouped}"""
+        hot_cte = _sql_salted_hot_cte(hot, "nb", "db", max_bucket)
         sk_body = (
             f"SELECT doc_id, shingle_hashes FROM {index_view} "
             f"UNION ALL SELECT doc_id, shingle_hashes FROM {batch_view}"
         )
-    return (
-        "WITH "
-        + grouped_cte
-        + cold
-        + hot
-        + """,
+    # merge-hinted sketch attaches: never broadcast (see _verify_pairs
+    # for the OOM measurements)
+    return f"""
+    WITH cold AS ({cold}
+    ),{hot_cte},
     cands AS (
       SELECT DISTINCT p.doc_a AS doc_a, p.doc_b AS doc_b FROM (
         SELECT p FROM cold UNION ALL SELECT p FROM hot_pairs
       )
-    )"""
-        + _sql_verify_tail(threshold, sk_body)
+    ),
+    sk AS ({sk_body})
+    SELECT doc_a, doc_b, jaccard FROM (
+      SELECT /*+ MERGE(l), MERGE(r) */
+             c.doc_a AS doc_a, c.doc_b AS doc_b,
+             {_sql_jaccard('l.shingle_hashes', 'r.shingle_hashes')} AS jaccard
+      FROM cands c
+      JOIN sk l ON c.doc_a = l.doc_id
+      JOIN sk r ON c.doc_b = r.doc_id
     )
+    WHERE jaccard >= {threshold!r}"""
 
 
 def minhash_lsh_pairs_cross(
@@ -754,14 +725,13 @@ def _observe_hot_buckets(
     once the first action over the plan completes.
 
     ``on_done`` (optional thunk) runs once the first action finishes —
-    the salt path passes the grouped table's ``unpersist`` so cache
+    the salt paths pass the grouped table's ``unpersist`` so cache
     ownership ends with the action that needed it (ADVICE r7). When
     there is no callback AND warning logs are disabled, no waiter
     thread spawns at all — that bound applies to DROP mode only; salt
     mode always passes the unpersist callback, so its waiter always
     parks until the first action (and, for a plan that is never
-    executed, until process exit — see the construction-cost note in
-    :func:`_bucket_candidate_pairs`)."""
+    executed, until process exit)."""
     hot = n > max_bucket
     consequence = {
         "salt": "salted into sub-buckets (zero recall loss)",
@@ -793,19 +763,9 @@ def _observe_hot_buckets(
     )
 
 
-def _pairs_within(ds) -> F.Column:
-    """All (a<b) pairs of an ASCENDING-sorted array column, as
-    array<struct<doc_a,doc_b>>: for element i, pair it with every
-    later element. Pure codegen; the caller bounds the array size."""
-    return F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + F.lit(2), F.size(ds)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+def _pairs_within(name: str) -> F.Column:
+    """:func:`_sql_pairs_within` of the array column ``name``."""
+    return F.expr(_sql_pairs_within(name))
 
 
 def _bucket_candidate_pairs(
@@ -814,7 +774,6 @@ def _bucket_candidate_pairs(
     max_bucket: int,
     hot_buckets: str = "salt",
     stats_out: dict | None = None,
-    eager_probe: bool = True,
 ) -> DataFrame:
     """(doc_id, *bucket_keys) → distinct candidate (doc_a < doc_b)
     pairs that share a bucket.
@@ -874,19 +833,6 @@ def _bucket_candidate_pairs(
     the persist itself is unpersisted by the observe waiter once the
     first main action completes (cache ownership = one action).
 
-    CONSTRUCTION-COST CONTRACT (salt mode, eager_probe=True): building
-    the plan runs a Spark job and leaves the grouped table
-    MATERIALIZED in the cache, owned by the waiter until the first
-    action over the returned plan completes. A caller constructing
-    plans it may abandon unexecuted should pass ``eager_probe=False``
-    (lazy persist — zero bytes if never executed; the per-micro-batch
-    ingestion path does this for its own latency reasons) or
-    ``spark.catalog.clearCache()`` after discarding them. Caveat:
-    ``stats_out`` is itself an eager probe — passing it runs the same
-    build-time job and materializes the persist regardless of
-    ``eager_probe``, so abandonable-plan callers must not combine
-    ``eager_probe=False`` with ``stats_out``.
-
     SINGLE-ACTION OPTIMIZED (ADVICE r8): the waiter's unpersist fires
     when the FIRST action over the returned plan completes — including
     a partial action like ``first()``/``take()``. A caller running
@@ -899,7 +845,7 @@ def _bucket_candidate_pairs(
     """
     if hot_buckets not in ("salt", "drop"):
         raise ValueError(f"hot_buckets must be 'salt' or 'drop', got {hot_buckets!r}")
-    n, ds = F.col("n_docs"), F.col("ds")
+    n = F.col("n_docs")
     buckets_all = keyed.groupBy(*bucket_keys).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sort_array(F.collect_list("doc_id")).alias("ds"),
@@ -918,7 +864,7 @@ def _bucket_candidate_pairs(
         # MEMORY_AND_DISK entries for the session (ADVICE r7).
         buckets_all = buckets_all.persist()
     hot_nb = None
-    if (hot_buckets == "salt" and eager_probe) or stats_out is not None:
+    if hot_buckets == "salt" or stats_out is not None:
         row = buckets_all.filter(n > max_bucket).agg(
             F.count(F.lit(1)).alias("nb"),
             F.coalesce(F.sum("n_docs"), F.lit(0)).alias("nd"),
@@ -931,11 +877,7 @@ def _bucket_candidate_pairs(
                     "mode": hot_buckets,
                 }
             )
-        # the cold-plan prune below keys on eager_probe EXPLICITLY:
-        # a caller that opted out of the probe (per-micro-batch path)
-        # but passed stats_out must not get the pruned plan back as a
-        # side effect of its monitoring
-        if hot_buckets == "salt" and eager_probe:
+        if hot_buckets == "salt":
             hot_nb = int(row["nb"])
 
     def _emit(pairs: DataFrame) -> DataFrame:
@@ -953,7 +895,7 @@ def _bucket_candidate_pairs(
         # are still seen by the metric
         buckets_all = _observe_hot_buckets(buckets_all, "drop", max_bucket, n)
         cold = buckets_all.filter((n >= 2) & (n <= max_bucket))
-        return _emit(cold.select(F.explode(_pairs_within(ds)).alias("p")))
+        return _emit(cold.select(F.explode(_pairs_within("ds")).alias("p")))
     if hot_nb == 0:
         # The probe proved every bucket fits the cap, so the salted
         # redistribution would be a union with a provably-empty
@@ -974,9 +916,9 @@ def _bucket_candidate_pairs(
             on_done=buckets_all.unpersist,
         )
         cold = observed.filter((n >= 2) & (n <= max_bucket))
-        return _emit(cold.select(F.explode(_pairs_within(ds)).alias("p")))
+        return _emit(cold.select(F.explode(_pairs_within("ds")).alias("p")))
     cold = buckets_all.filter((n >= 2) & (n <= max_bucket))
-    pairs = cold.select(F.explode(_pairs_within(ds)).alias("p"))
+    pairs = cold.select(F.explode(_pairs_within("ds")).alias("p"))
     # observe sits on the single-consumer hot branch so counts aren't
     # doubled by the cold branch traversing the same node
     hot = _observe_hot_buckets(
@@ -995,8 +937,8 @@ def _salted_hot_pairs(
     max_bucket: int,
 ) -> DataFrame:
     """Triangle-salted redistribution of hot buckets (the exact-pair-
-    set-preserving hot branch of :func:`_bucket_candidate_pairs`,
-    shared with :func:`fused_pairs_with_index`): ``hot`` carries
+    set-preserving hot branch of :func:`_bucket_candidate_pairs`;
+    :func:`_sql_salted_hot_cte` is its SQL form): ``hot`` carries
     (*bucket_keys, ``n_col`` doc count, ``list_col`` sorted doc array)
     rows already filtered to n > max_bucket; returns the exploded
     candidate pairs as one ``p`` struct column (pre-distinct). Each
@@ -1054,7 +996,7 @@ def _salted_hot_pairs(
     )
     return cellg.select(
         F.explode(
-            F.when(F.col("ci") == F.col("cj"), _pairs_within(F.col("lo"))).otherwise(
+            F.when(F.col("ci") == F.col("cj"), _pairs_within("lo")).otherwise(
                 cross
             )
         ).alias("p")
@@ -1103,24 +1045,10 @@ def _verify_pairs(
     paired = candidates.join(left.hint("merge"), "doc_a").join(
         right.hint("merge"), "doc_b"
     )
-    return _jaccard_tail(paired, threshold)
-
-
-def _jaccard_tail(paired: DataFrame, threshold: float) -> DataFrame:
-    """THE exact-Jaccard expression (single definition — every verify
-    path must stay bit-identical): hash-set intersection of the two
-    shingle arrays in the JVM, |A∩B| / |A∪B| rounded to 6 places."""
-    n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     jac = paired.select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            n_inter.cast("double")
-            / (F.size("sh_a") + F.size("sh_b") - n_inter),
-            6,
-        ).alias("jaccard"),
+        "doc_a", "doc_b", F.expr(_sql_jaccard("sh_a", "sh_b")).alias("jaccard")
     )
-    return jac.filter(F.col("jaccard") >= threshold).select("doc_a", "doc_b", "jaccard")
+    return jac.filter(F.col("jaccard") >= threshold)
 
 
 def _verify_jaccard_pairs(
@@ -1478,194 +1406,11 @@ def _index_band_rows(bidx: DataFrame, side: int | None = None) -> DataFrame:
     """(doc_id, band, band_hash) rows restored from an index frame's
     packed ``band_hashes`` array (:func:`build_dedup_index` output) —
     the exact rows the unpacked banding stage would produce, with
-    zero re-hashing (band id = 0-based array position).
-
-    Legacy compatibility (ADVICE r13): indexes persisted before the
-    r13 packed layout carry ``bands array<struct<band,band_hash>>``
-    instead — the documented contract is "sign the corpus once, reuse
-    forever", so those must keep reading. The struct explode yields
-    the identical rows. (The SQL ingestion fast path —
-    :func:`fused_grouped_sql` — assumes the packed layout; it is only
-    fed indexes the same streaming run just wrote.)"""
-    if "band_hashes" not in bidx.columns and "bands" in bidx.columns:
-        out = bidx.select("doc_id", F.explode("bands").alias("b")).select(
-            "doc_id",
-            F.col("b.band").cast("int").alias("band"),
-            F.col("b.band_hash").alias("band_hash"),
-        )
-    else:
-        out = bidx.select(
-            "doc_id", F.posexplode("band_hashes").alias("band", "band_hash")
-        ).select("doc_id", F.col("band").cast("int").alias("band"), "band_hash")
+    zero re-hashing (band id = 0-based array position)."""
+    out = bidx.select(
+        "doc_id", F.posexplode("band_hashes").alias("band", "band_hash")
+    ).select("doc_id", F.col("band").cast("int").alias("band"), "band_hash")
     return out.withColumn("side", F.lit(side)) if side is not None else out
-
-
-def minhash_lsh_pairs_from_index(
-    bidx: DataFrame, threshold: float = 0.8, max_bucket: int = 1000
-) -> DataFrame:
-    """Within-corpus near-dup pairs derived from a PRE-BUILT signature
-    index frame — identical results to :func:`minhash_lsh_pairs` on
-    the corpus the index was built from (a pytest differential pins
-    this), but the shingle/banding stages run ZERO times: the stored
-    sketches feed bucketing and the exact-Jaccard verify directly.
-
-    This is the ingestion-loop shape: a micro-batch builds its index
-    frame ONCE and reuses it for within-batch pairs, cross-index
-    pairs, and the index append — the batch text is touched once,
-    ever (q_stream_dedup_index)."""
-    candidates = _bucket_candidate_pairs(
-        _index_band_rows(bidx), ["band", "band_hash"], max_bucket,
-        # per-micro-batch construction: an eager probe job per batch
-        # costs more driver round-trips than the empty hot branch it
-        # would prune (A/B: q_dedup_incremental 2.32→2.69 s with the
-        # probe on) — keep the lazy two-branch union here
-        eager_probe=False,
-    )
-    return _verify_jaccard_pairs(
-        bidx.select("doc_id", "shingle_hashes"), candidates, threshold
-    )
-
-
-def dedup_against_index_banded(
-    bidx_batch: DataFrame,
-    index: DataFrame,
-    threshold: float = 0.8,
-    max_bucket_pairs: int = 250_000,
-) -> DataFrame:
-    """Incremental ingestion dedup where the BATCH side is already an
-    index frame too: near-dup pairs (doc_a ∈ index, doc_b ∈ batch)
-    with both sides contributing stored sketches — no signature work
-    at all (the streaming ingestion loop builds the batch's index
-    frame once and feeds it here AND to the index append). Same
-    bucketed A×B semantics as :func:`dedup_against_index`."""
-    bands = _index_band_rows(index, side=0).unionByName(
-        _index_band_rows(bidx_batch, side=1)
-    )
-    return _cross_pairs_from_tagged(
-        bands,
-        index.select("doc_id", "shingle_hashes"),
-        bidx_batch.select("doc_id", "shingle_hashes"),
-        threshold,
-        max_bucket_pairs,
-    )
-
-
-def fused_pairs_with_index(
-    bidx_batch: DataFrame,
-    index: DataFrame | None,
-    threshold: float = 0.8,
-    max_bucket: int = 1000,
-    max_bucket_pairs: int = 250_000,
-    check_disjoint: bool = False,
-) -> DataFrame:
-    """WITHIN-batch pairs and CROSS-index pairs from ONE bucketing
-    shuffle and ONE verify join pass — the ingestion-loop fusion of
-    :func:`minhash_lsh_pairs_from_index` ∪
-    :func:`dedup_against_index_banded` (r13 optimization; measured
-    5.1 s → 3.0 s per 2500-doc micro-batch at sf0.1, identical pair
-    set). ``index is None`` degrades to the within-only form over the
-    same single-shuffle plan.
-
-    REQUIRES doc_id-disjoint sides (the ingestion contract: the index
-    holds prior batches of the same corpus, so ids never repeat) —
-    the single verify join resolves both pair ends against the UNION
-    sketch frame, which is only correct when ids are globally unique.
-    Corpora that may share ids (A×B decontamination) must keep using
-    the side-tracked :func:`dedup_against_index_banded`.
-
-    Pair-set parity with the two-pass form, case by case per bucket
-    (da = index docs, db = batch docs in the bucket):
-
-    - within pairs: generated from ``db`` alone, so the bucket
-      membership test, the ``max_bucket`` cap and the triangle-salt
-      redistribution of over-cap buckets (exact pair set, bounded
-      tasks — via :func:`_salted_hot_pairs`) see exactly the rows the
-      standalone within path groups.
-    - cross pairs: da×db capped by ``max_bucket_pairs`` with the drop
-      policy, exactly :func:`_cross_pairs_from_tagged`'s filter.
-    - the distinct runs over the union: within pairs have both ends
-      in the batch and cross pairs one end in the index, so no pair
-      can appear in both sets and distinct(∪) ≡ distinct ∪ distinct.
-
-    The grouped table is persisted for the same reason as
-    :func:`_bucket_candidate_pairs` (cold + hot consumers would each
-    re-run the bucketing shuffle), with the same observe-waiter
-    unpersist-after-first-action ownership and hot-bucket logging.
-    """
-    if index is None:
-        return minhash_lsh_pairs_from_index(
-            bidx_batch, threshold=threshold, max_bucket=max_bucket
-        )
-    if check_disjoint:
-        # opt-in guard (r13 verdict item 8): one cheap semi-join count
-        # job turns the silent-wrong-pairs misuse (overlapping ids) into
-        # a loud error. Off by default — the ingestion loop satisfies
-        # disjointness by construction and pays no extra job.
-        n_shared = (
-            bidx_batch.select("doc_id")
-            .join(index.select("doc_id"), "doc_id", "semi")
-            .count()
-        )
-        if n_shared:
-            raise ValueError(
-                f"fused_pairs_with_index requires doc_id-disjoint sides; "
-                f"{n_shared} doc_id(s) appear in BOTH the batch and the "
-                "index (the union-sketch verify would silently duplicate "
-                "matches). Use dedup_against_index_banded for overlapping-"
-                "id corpora."
-            )
-    bands = _index_band_rows(index, side=0).unionByName(
-        _index_band_rows(bidx_batch, side=1)
-    )
-    da, db, nb = F.col("da"), F.col("db"), F.col("nb")
-    grouped = (
-        bands.groupBy("band", "band_hash")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.when(F.col("side") == 0, F.col("doc_id")))
-            ).alias("da"),
-            F.sort_array(
-                F.collect_list(F.when(F.col("side") == 1, F.col("doc_id")))
-            ).alias("db"),
-        )
-        .withColumn("nb", F.size(db))
-        .persist()
-    )
-    empty_pairs = F.array().cast("array<struct<doc_a:bigint,doc_b:bigint>>")
-    # bigint product: same int32-overflow guard as _cross_pairs_from_tagged
-    cross_arr = F.when(
-        (F.size(da) >= 1)
-        & (nb >= 1)
-        & (F.size(da).cast("bigint") * nb.cast("bigint") <= max_bucket_pairs),
-        F.flatten(
-            F.transform(
-                da,
-                lambda x: F.transform(
-                    db, lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
-                ),
-            )
-        ),
-    ).otherwise(empty_pairs)
-    within_cold = F.when(
-        (nb >= 2) & (nb <= max_bucket), _pairs_within(db)
-    ).otherwise(empty_pairs)
-    cold = grouped.select(F.explode(F.concat(within_cold, cross_arr)).alias("p"))
-    hot = _observe_hot_buckets(
-        grouped.filter(nb > max_bucket), "salt", max_bucket, nb,
-        on_done=grouped.unpersist,
-    )
-    hot_pairs = _salted_hot_pairs(
-        hot, ["band", "band_hash"], "nb", "db", max_bucket
-    )
-    candidates = (
-        cold.unionByName(hot_pairs)
-        .select(F.col("p.doc_a"), F.col("p.doc_b"))
-        .distinct()
-    )
-    sk = index.select("doc_id", "shingle_hashes").unionByName(
-        bidx_batch.select("doc_id", "shingle_hashes")
-    )
-    return _verify_pairs(candidates, sk, sk, threshold)
 
 
 def fused_pairs_via_views(
@@ -1675,40 +1420,86 @@ def fused_pairs_via_views(
     threshold: float = 0.8,
     max_bucket: int = 1000,
     max_bucket_pairs: int = 250_000,
+    check_disjoint: bool = False,
 ) -> DataFrame:
-    """The ingestion fast path assembled: materialized-grouped
-    two-statement form of :func:`fused_pairs_sql`. Statement 1 builds
-    the bucketing aggregate and ``persist()``s it (lazy — zero bytes
-    if the result is never executed) so the cold and hot branches
-    share ONE execution of the bucketing shuffle, exactly like
-    :func:`fused_pairs_with_index`'s persist; statement 2 is the
-    pair-expansion + verify tail over it.
+    """WITHIN-batch pairs and CROSS-index pairs (doc_a ∈ index,
+    doc_b ∈ batch) from ONE bucketing shuffle and ONE verify join
+    pass, over temp views holding packed index frames
+    (:func:`build_dedup_index` output; :func:`read_prior_index` for
+    the index side). ``index_view is None`` gives the within-batch
+    pairs alone — the same pair set :func:`minhash_lsh_pairs` finds
+    over the batch's documents. This is q_stream_dedup_index's
+    per-micro-batch path.
 
-    CACHE OWNERSHIP: the persisted grouped table is left registered —
-    the per-micro-batch ingestion loop (the intended caller) already
-    runs ``spark.catalog.clearCache()`` at the end of every batch,
-    which releases it along with the batch's sketch cache. Other
-    callers must clear or unpersist themselves."""
-    grouped = spark.sql(fused_grouped_sql(batch_view, index_view)).persist()
-    gview = f"{batch_view}_grouped"
-    grouped.createOrReplaceTempView(gview)
-    return spark.sql(
-        fused_pairs_sql(
-            batch_view,
-            index_view,
-            threshold=threshold,
-            max_bucket=max_bucket,
-            max_bucket_pairs=max_bucket_pairs,
-            grouped_view=gview,
+    WHY SQL (r14, guide §1/§5 — driver latency is part of the query):
+    built through ~70 DataFrame/Column py4j calls, each re-analyzing a
+    growing tree, the plan cost ~0.5-0.6 s of driver time per batch
+    before any task ran; two statements over temp views move parsing
+    and analysis into one JVM round trip each.
+
+    Statement 1 (:func:`_fused_grouped_sql`) builds the bucketing
+    aggregate, ``persist()``s it (lazy — zero bytes if the result is
+    never executed) and registers it as ``{batch_view}_grouped``, so
+    the cold and hot branches share ONE execution of the bucketing
+    shuffle (measured: the inline-CTE form re-ran the final aggregate
+    per branch, ~0.2 s/batch at sf0.1). Its over-cap rows are
+    registered as ``{batch_view}_grouped_hot`` under the
+    :func:`_observe_hot_buckets` metric: once the first action over
+    the result completes, the waiter unpersists the grouped table and
+    logs a WARNING when buckets were salted — zero extra jobs, and the
+    cache has an owner whatever the caller does (a later read of
+    either view re-runs the bucketing aggregate uncached). Statement 2
+    (:func:`_fused_pairs_sql`) expands pairs and verifies them.
+
+    REQUIRES doc_id-disjoint sides when ``index_view`` is given (the
+    ingestion contract: the index holds prior batches of the same
+    stream, so ids never repeat) — the single verify join resolves
+    both pair ends against the UNION sketch frame, which is only
+    correct when ids are globally unique. ``check_disjoint=True`` runs
+    one semi-join count job first and raises on overlap; corpora that
+    may share ids use the side-tracked :func:`dedup_against_index`."""
+    if check_disjoint and index_view is not None:
+        n_shared = (
+            spark.table(batch_view).select("doc_id")
+            .join(spark.table(index_view).select("doc_id"), "doc_id", "semi")
+            .count()
         )
+        if n_shared:
+            raise ValueError(
+                f"fused_pairs_via_views requires doc_id-disjoint sides; "
+                f"{n_shared} doc_id(s) appear in BOTH the batch and the "
+                "index (the union-sketch verify would silently duplicate "
+                "matches). Use dedup_against_index for overlapping-id "
+                "corpora."
+            )
+    grouped = spark.sql(_fused_grouped_sql(batch_view, index_view)).persist()
+    grouped.createOrReplaceTempView(f"{batch_view}_grouped")
+    n = F.col("n_docs" if index_view is None else "nb")
+    _observe_hot_buckets(
+        grouped.filter(n > max_bucket), "salt", max_bucket, n,
+        on_done=grouped.unpersist,
+    ).createOrReplaceTempView(f"{batch_view}_grouped_hot")
+    return spark.sql(
+        _fused_pairs_sql(batch_view, index_view, threshold, max_bucket, max_bucket_pairs)
     )
+
+
+# Every layout an index partition has been written in: the packed
+# build_dedup_index frame, plus the pre-r13 ``bands`` struct array
+# (written by an unordered collect_list). Reading with this explicit
+# schema gives every partition every column (NULL where absent), so a
+# directory mixing layouts loses no docs and needs no schema inference.
+_STORED_INDEX_SCHEMA = (
+    _INDEX_SCHEMA + ", bands array<struct<band:int,band_hash:bigint>>"
+)
 
 
 def read_prior_index(spark, idx_dir: str, batch_id: int) -> DataFrame | None:
     """Storage-derived view of a per-micro-batch partitioned signature
     index (``batch=<id>`` subdirectories, each written with overwrite
     by its own micro-batch) holding ONLY batches BEFORE ``batch_id``
-    — or ``None`` when no prior batch exists.
+    — or ``None`` when no prior batch exists. Rows come back in the
+    packed layout whatever layout each partition was written in.
 
     This is the retry/restart-safe read side of streaming ingestion
     dedup: after a micro-batch retry the directory already holds THIS
@@ -1746,8 +1537,14 @@ def read_prior_index(spark, idx_dir: str, batch_id: int) -> DataFrame | None:
     ]
     if not prior_dirs:
         return None
-    return (
-        spark.read.option("basePath", idx_dir).parquet(*prior_dirs).drop("batch")
+    stored = spark.read.schema(_STORED_INDEX_SCHEMA).parquet(*prior_dirs)
+    # array_sort orders the legacy structs by band, i.e. array position
+    return stored.select(
+        "doc_id",
+        "shingle_hashes",
+        F.expr(
+            "coalesce(band_hashes, transform(array_sort(bands), b -> b.band_hash))"
+        ).alias("band_hashes"),
     )
 
 

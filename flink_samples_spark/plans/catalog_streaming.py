@@ -1042,15 +1042,15 @@ def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             # frame feeds within-batch pairs, cross-index pairs, and
             # the index append — the corpus text is touched once, ever.
             # r13: within + cross come out of ONE bucketing shuffle and
-            # ONE verify join pass (fused_pairs_with_index — measured
-            # 5.1 s → 3.0 s per micro-batch, identical pair set; the
+            # ONE verify join pass (fused_pairs_via_views; the fusion
+            # measured 5.1 s → 3.0 s per micro-batch against separate
+            # within and cross passes, identical pair set; the
             # ingestion loop's doc_ids are disjoint across batches,
             # which is exactly the fusion's correctness requirement).
-            # r14: the fused plan is submitted as ONE SQL statement
-            # over temp views (fused_pairs_sql — bit-identical pair
-            # set, pytest-pinned) instead of ~70 per-batch
-            # DataFrame/Column py4j calls, killing the ~0.5 s/batch
-            # driver-side plan-construction tax (guide §1/§5).
+            # r14: fused_pairs_via_views submits the plan as SQL over
+            # temp views instead of ~70 per-batch DataFrame/Column
+            # py4j calls, killing the ~0.5 s/batch driver-side
+            # plan-construction tax (guide §1/§5).
             # foreachBatch hands us a DataFrame bound to a CLONED
             # session with its own temp-view catalog — register the
             # views and submit the SQL through THAT session, or the

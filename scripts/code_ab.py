@@ -16,8 +16,9 @@ shares one host window.
     python scripts/code_ab.py OLD_REF --perfbench ewma_python_state \
         --pairs 10 --seeds 11-20
 
-Per block it runs old then new (fresh process each, same query list,
-best-of-``--samples`` per query inside the process), and the verdict
+Per block it runs both trees (fresh process each, same query list,
+best-of-``--samples`` per query inside the process), old first on even
+blocks and new first on odd ones, and the verdict
 per query is min-across-blocks(new) / min-across-blocks(old): the min
 over alternating blocks is the fairest same-window estimate either
 tree gets. Ratios ≤ ~1.1 mean the flag was host noise (A/B-REFUTED);
@@ -169,6 +170,14 @@ def seed_list(spec: str) -> list[int]:
     return list(range(int(a), int(b or a) + 1))
 
 
+def block_order(i: int, old_tree: str) -> list[tuple[str, str]]:
+    """(side, tree) in the order block or pair ``i`` runs them: old
+    first on even ``i``, new first on odd, so neither tree always runs
+    right after the other's process exits."""
+    order = [("old", old_tree), ("new", ROOT)]
+    return order[::-1] if i % 2 else order
+
+
 def run_perfbench(args: argparse.Namespace, old_tree: str, label: str) -> None:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -179,11 +188,8 @@ def run_perfbench(args: argparse.Namespace, old_tree: str, label: str) -> None:
     pairs, failed = [], {"old": 0, "new": 0}
     for i in range(args.pairs):
         seed = seeds[i % len(seeds)]
-        order = [("old", old_tree), ("new", ROOT)]
-        if i % 2:
-            order.reverse()
         got = {}
-        for side, repo in order:
+        for side, repo in block_order(i, old_tree):
             res = perfbench_run(repo, args.perfbench, seed,
                                 bench["run_seconds"], args.trace)
             if res is None or res.get("failed", 1) or not res.get("correct"):
@@ -208,7 +214,7 @@ def run_queries(args: argparse.Namespace, old_tree: str, label: str) -> None:
             f.write(RUNNER)
         for b in range(args.blocks):
             block = {}
-            for side, repo in (("old", old_tree), ("new", ROOT)):
+            for side, repo in block_order(b, old_tree):
                 block[side] = run_tree(repo, runner, args.sf_dir,
                                        args.samples, args.queries)
                 print(f"block {b + 1}/{args.blocks} {side}: "

@@ -128,12 +128,12 @@ def test_dedup_index_survives_midbatch_kills_both_interleavings(spark, tmp_path)
     overwrite, the index's per-batch partition overwrite, and
     read_prior_index EXCLUDING the in-flight batch's own (possibly
     partial) signatures — and must land exactly the batch operator's
-    pair set."""
+    pair set. Each batch runs the production path: temp views on the
+    batch's own session and fused_pairs_via_views."""
     from flink_samples_spark.llmops.dedup import (
         build_dedup_index,
-        dedup_against_index_banded,
+        fused_pairs_via_views,
         minhash_lsh_pairs,
-        minhash_lsh_pairs_from_index,
         read_prior_index,
     )
     from flink_samples_spark.streaming.sinks import (
@@ -184,13 +184,14 @@ def test_dedup_index_survives_midbatch_kills_both_interleavings(spark, tmp_path)
     kills = {1: "after_sink", 2: "after_index"}
 
     def process(batch, batch_id: int) -> None:
+        sp = batch.sparkSession
         bidx = build_dedup_index(batch, k=3).cache()
-        within = minhash_lsh_pairs_from_index(bidx, threshold=0.8)
-        prior = read_prior_index(spark, idx, batch_id)
-        pairs = (
-            within.unionByName(dedup_against_index_banded(bidx, prior, threshold=0.8))
-            if prior is not None
-            else within
+        prior = read_prior_index(sp, idx, batch_id)
+        bidx.createOrReplaceTempView("t_fi_batch")
+        if prior is not None:
+            prior.createOrReplaceTempView("t_fi_index")
+        pairs = fused_pairs_via_views(
+            sp, "t_fi_batch", "t_fi_index" if prior is not None else None, threshold=0.8
         )
         sink_fn(pairs, batch_id)
         if kills.get(batch_id) == "after_sink":

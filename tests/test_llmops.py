@@ -943,210 +943,176 @@ def test_read_prior_index_ignores_crash_leftovers(spark, tmp_path):
     assert read_prior_index(spark, idx, 3) is None
 
 
-def test_minhash_pairs_from_index_match_direct_path(spark, sf_dir):
-    """The index-frame-derived pair paths must reproduce the direct
-    signature paths exactly — they restore the SAME band rows from
-    the packed index, so results are equal row-for-row."""
-    from flink_samples_spark.llmops.dedup import (
-        build_dedup_index,
-        dedup_against_index,
-        dedup_against_index_banded,
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_from_index,
-    )
-    from flink_samples_spark.sources.readers import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    half_a = docs.filter("doc_id % 2 = 0")
-    half_b = docs.filter("doc_id % 2 = 1")
-
-    direct = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, k=3, threshold=0.8).collect()
-    )
-    bidx = build_dedup_index(docs, k=3).cache()
-    via_index = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs_from_index(bidx, threshold=0.8).collect()
-    )
-    assert via_index == direct, (len(via_index), len(direct))
-
-    idx_a = build_dedup_index(half_a, k=3).cache()
-    cross_direct = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup_against_index(half_b, idx_a, k=3, threshold=0.8).collect()
-    )
-    bidx_b = build_dedup_index(half_b, k=3).cache()
-    cross_banded = sorted(
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in dedup_against_index_banded(bidx_b, idx_a, threshold=0.8).collect()
-    )
-    assert cross_banded == cross_direct, (len(cross_banded), len(cross_direct))
-    spark.catalog.clearCache()
+_BOILER = (
+    "all rights reserved terms of service apply to this page "
+    "contact the webmaster for further information about this site"
+)
 
 
-def test_fused_pairs_with_index_match_two_pass_form(spark, sf_dir):
-    """r13 optimization: the single-shuffle fused ingestion path
-    (fused_pairs_with_index) must equal within ∪ cross of the two-pass
-    form row-for-row — on a cold corpus, on a corpus with HOT
-    within-batch buckets (exercising the fused salt branch), and with
-    index=None (within-only degradation)."""
-    from flink_samples_spark.llmops.dedup import (
-        build_dedup_index,
-        dedup_against_index_banded,
-        fused_pairs_with_index,
-        minhash_lsh_pairs_from_index,
-    )
-    from flink_samples_spark.sources.readers import load_table
-
-    def pairset(df):
-        return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
-
-    def two_pass(bidx, index, **kw):
-        w = minhash_lsh_pairs_from_index(bidx, threshold=0.8, **kw)
-        c = dedup_against_index_banded(bidx, index, threshold=0.8)
-        return w.unionByName(c)
-
-    # cold corpus (driver fixture halves)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = build_dedup_index(docs.filter("doc_id % 2 = 0"), k=3).cache()
-    bidx = build_dedup_index(docs.filter("doc_id % 2 = 1"), k=3).cache()
-    assert pairset(fused_pairs_with_index(bidx, idx, 0.8)) == pairset(
-        two_pass(bidx, idx)
-    )
-    # index=None degrades to the within-only path
-    assert pairset(fused_pairs_with_index(bidx, None, 0.8)) == pairset(
-        minhash_lsh_pairs_from_index(bidx, threshold=0.8)
-    )
-    spark.catalog.clearCache()
-
-    # hot within-batch buckets: 12 near-identical boilerplate docs in
-    # the batch blow past max_bucket=4 → the fused salt branch must
-    # reproduce the two-pass salted pair set exactly
-    boiler = (
-        "all rights reserved terms of service apply to this page "
-        "contact the webmaster for further information about this site"
-    )
-    batch_rows = [(i, f"{boiler} variant {i % 2}") for i in range(12)]
-    index_rows = [(100 + i, f"{boiler} variant {i % 2}") for i in range(3)]
-    b = spark.createDataFrame(batch_rows, "doc_id long, text string")
-    ix = spark.createDataFrame(index_rows, "doc_id long, text string")
-    bidx_hot = build_dedup_index(b, k=3).cache()
-    idx_hot = build_dedup_index(ix, k=3).cache()
-    fused_hot = pairset(
-        fused_pairs_with_index(bidx_hot, idx_hot, 0.8, max_bucket=4)
-    )
-    assert fused_hot == pairset(two_pass(bidx_hot, idx_hot, max_bucket=4))
-    # sanity: the hot fixture actually produces within pairs (salted)
-    # AND cross pairs (index ids 100+ as doc_a)
-    assert any(a < 100 and bb < 100 for a, bb, _ in fused_hot)
-    assert any(a >= 100 for a, bb, _ in fused_hot)
-    spark.catalog.clearCache()
-
-
-def test_fused_pairs_sql_matches_dataframe_form(spark, sf_dir):
-    """r14 optimization: the one-statement SQL ingestion path
-    (fused_pairs_sql over temp views) must equal fused_pairs_with_index
-    row-for-row — cold corpus, HOT within-batch buckets (the SQL salt
-    CTE chain), and the index-less degradation."""
-    from flink_samples_spark.llmops.dedup import (
-        build_dedup_index,
-        fused_pairs_via_views,
-        fused_pairs_with_index,
-    )
-    from flink_samples_spark.sources.readers import load_table
-
-    def pairset(df):
-        return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
-
-    def sql_form(bidx, index, **kw):
-        bidx.createOrReplaceTempView("t_fps_batch")
-        if index is not None:
-            index.createOrReplaceTempView("t_fps_index")
-        return fused_pairs_via_views(
-            spark,
-            "t_fps_batch",
-            "t_fps_index" if index is not None else None,
-            threshold=0.8,
-            **kw,
-        )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    idx = build_dedup_index(docs.filter("doc_id % 2 = 0"), k=3).cache()
-    bidx = build_dedup_index(docs.filter("doc_id % 2 = 1"), k=3).cache()
-    assert pairset(sql_form(bidx, idx)) == pairset(
-        fused_pairs_with_index(bidx, idx, 0.8)
-    )
-    # index=None degrades to the within-only path
-    assert pairset(sql_form(bidx, None)) == pairset(
-        fused_pairs_with_index(bidx, None, 0.8)
-    )
-    spark.catalog.clearCache()
-
-    # hot within-batch buckets (12 boilerplate docs past max_bucket=4):
-    # the SQL salt CTE chain must reproduce the salted pair set exactly
-    boiler = (
-        "all rights reserved terms of service apply to this page "
-        "contact the webmaster for further information about this site"
-    )
+def _hot_fixture(spark):
+    """A 12-doc batch of two boilerplate variants (each band bucket
+    holds 6 or 12 batch docs, over max_bucket=4) and a 3-doc index of
+    the same variants."""
     b = spark.createDataFrame(
-        [(i, f"{boiler} variant {i % 2}") for i in range(12)],
+        [(i, f"{_BOILER} variant {i % 2}") for i in range(12)],
         "doc_id long, text string",
     )
     ix = spark.createDataFrame(
-        [(100 + i, f"{boiler} variant {i % 2}") for i in range(3)],
+        [(100 + i, f"{_BOILER} variant {i % 2}") for i in range(3)],
         "doc_id long, text string",
     )
+    return b, ix
+
+
+def _fused_pairs(spark, bidx, index, name="t_fpv", **kw):
+    """fused_pairs_via_views over temp views of ``bidx`` and ``index``
+    (None: no index view)."""
+    from flink_samples_spark.llmops.dedup import fused_pairs_via_views
+
+    bidx.createOrReplaceTempView(f"{name}_batch")
+    if index is not None:
+        index.createOrReplaceTempView(f"{name}_index")
+    return fused_pairs_via_views(
+        spark, f"{name}_batch", f"{name}_index" if index is not None else None,
+        threshold=0.8, **kw,
+    )
+
+
+def _unordered(rows) -> set:
+    """(low id, high id, jaccard): fused cross pairs come out as
+    (index doc, batch doc), the batch operator's as doc_a < doc_b."""
+    return {(min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b), r.jaccard) for r in rows}
+
+
+def _batch_reference(docs, batch_ids) -> set:
+    """The q_dedup_near pairs (minhash_lsh_pairs) over index ∪ batch
+    docs that have at least one end in the batch."""
+    return _unordered(
+        r for r in minhash_lsh_pairs(docs, k=3, threshold=0.8).collect()
+        if r.doc_a in batch_ids or r.doc_b in batch_ids
+    )
+
+
+def test_fused_pairs_via_views_match_batch_pairs(spark, sf_dir):
+    """The ingestion path (fused_pairs_via_views: within-batch pairs
+    and batch×index pairs from one bucketing shuffle) must find
+    exactly the batch operator's pairs that touch the batch — on the
+    cold driver fixture split in halves, on HOT within-batch buckets
+    (12 boilerplate docs past max_bucket=4: the salt CTE chain), and
+    with no index view."""
+    from flink_samples_spark.llmops.dedup import build_dedup_index
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    odd = docs.filter("doc_id % 2 = 1")
+    odd_ids = {r.doc_id for r in odd.select("doc_id").collect()}
+    idx = build_dedup_index(docs.filter("doc_id % 2 = 0"), k=3).cache()
+    bidx = build_dedup_index(odd, k=3).cache()
+    want = _batch_reference(docs, odd_ids)
+    assert any(a in odd_ids and b in odd_ids for a, b, _ in want)
+    assert any((a in odd_ids) != (b in odd_ids) for a, b, _ in want)
+    assert _unordered(_fused_pairs(spark, bidx, idx).collect()) == want
+    # no index view: the within-batch pairs alone
+    got = [(r.doc_a, r.doc_b, r.jaccard) for r in _fused_pairs(spark, bidx, None).collect()]
+    assert sorted(got) == sorted(_batch_reference(odd, odd_ids))
+    spark.catalog.clearCache()
+
+    b, ix = _hot_fixture(spark)
     bidx_hot = build_dedup_index(b, k=3).cache()
     idx_hot = build_dedup_index(ix, k=3).cache()
-    got = pairset(sql_form(bidx_hot, idx_hot, max_bucket=4))
-    assert got == pairset(
-        fused_pairs_with_index(bidx_hot, idx_hot, 0.8, max_bucket=4)
-    )
+    got = _unordered(_fused_pairs(spark, bidx_hot, idx_hot, max_bucket=4).collect())
+    assert got == _batch_reference(b.unionByName(ix), set(range(12)))
     # sanity: within (salted) AND cross pairs both present
     assert any(a < 100 and bb < 100 for a, bb, _ in got)
-    assert any(a >= 100 for a, bb, _ in got)
+    assert any(bb >= 100 for a, bb, _ in got)
     spark.catalog.clearCache()
 
 
-def test_index_band_rows_reads_legacy_struct_layout(spark, sf_dir):
-    """ADVICE r13: indexes persisted BEFORE the r13 packed layout carry
-    bands array<struct<band,band_hash>>; the documented index contract
-    is 'sign once, reuse forever', so _index_band_rows must keep
-    reading them — identical rows to the packed form."""
-    from pyspark.sql import functions as FF
+def test_fused_pairs_via_views_warns_and_releases_hot_buckets(spark, tmp_path, caplog):
+    """Over-cap buckets on the SQL path are salted AND reported: after
+    the result's first action the waiter logs the hot bucket/doc
+    counts as a WARNING and unpersists the grouped table it owns, so
+    a caller that never clears the cache leaks nothing."""
+    import logging
+    import time
 
-    from flink_samples_spark.llmops.dedup import (
-        _index_band_rows,
-        build_dedup_index,
-    )
-    from flink_samples_spark.sources.readers import load_table
+    from flink_samples_spark.llmops.dedup import build_dedup_index
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(200)
-    packed = build_dedup_index(docs, k=3)
-    legacy = packed.select(
+    b, ix = _hot_fixture(spark)
+    bidx = build_dedup_index(b, k=3).cache()
+    idx = build_dedup_index(ix, k=3).cache()
+    logger = "flink_samples_spark.llmops.dedup"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        out = _fused_pairs(spark, bidx, idx, name="t_fpv_hot", max_bucket=4)
+        grouped = "t_fpv_hot_batch_grouped"
+        assert spark.catalog.isCached(grouped)
+        nb, nd = spark.sql(
+            f"SELECT count(1), sum(nb) FROM {grouped} WHERE nb > 4"
+        ).first()
+        assert nb > 0
+        want = (
+            f"LSH hot buckets (> 4 docs): {nb} buckets / {nd} doc-rows — "
+            "salted into sub-buckets (zero recall loss)"
+        )
+
+        def logged() -> int:
+            # earlier tests' waiters may still log their own counts here
+            return sum(r.name == logger and r.getMessage() == want for r in caplog.records)
+
+        out.write.parquet(str(tmp_path / "pairs"))
+        deadline = time.monotonic() + 30
+        while time.monotonic() < deadline and (
+            not logged() or spark.catalog.isCached(grouped)
+        ):
+            time.sleep(0.1)  # the waiter runs in its own thread
+    assert logged() == 1
+    assert not spark.catalog.isCached(grouped)
+    spark.catalog.clearCache()
+
+
+def test_read_prior_index_reads_mixed_layout_directory(spark, sf_dir, tmp_path):
+    """'Sign once, reuse forever': an index directory holding a
+    pre-r13 partition (bands array<struct<band,band_hash>>, in
+    collect_list order) beside a packed one must return EVERY doc in
+    the packed layout, and the ingestion path over it every pair."""
+    from flink_samples_spark.llmops.dedup import build_dedup_index, read_prior_index
+
+    idx = str(tmp_path / "idx")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    build_dedup_index(docs.filter("doc_id % 3 = 0"), k=3).select(
         "doc_id",
         "shingle_hashes",
-        FF.expr(
-            "transform(band_hashes, (h, i) -> named_struct('band', i, 'band_hash', h))"
+        F.expr(
+            "shuffle(transform(band_hashes, "
+            "(h, i) -> named_struct('band', i, 'band_hash', h)))"
         ).alias("bands"),
-    )
-    a = _index_band_rows(packed).collect()
-    b = _index_band_rows(legacy).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    ).write.parquet(f"{idx}/batch=0")
+    build_dedup_index(docs.filter("doc_id % 3 = 1"), k=3).write.parquet(f"{idx}/batch=1")
+
+    prior = read_prior_index(spark, idx, 2)
+    assert prior.columns == ["doc_id", "shingle_hashes", "band_hashes"]
+
+    def by_doc(df):
+        return {r.doc_id: (tuple(r.shingle_hashes), tuple(r.band_hashes)) for r in df.collect()}
+
+    assert by_doc(prior) == by_doc(build_dedup_index(docs.filter("doc_id % 3 <> 2"), k=3))
+
+    batch = docs.filter("doc_id % 3 = 2")
+    batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
+    want = _batch_reference(docs, batch_ids)
+    # reference pairs reach into both the legacy and the packed partition
+    assert {min(a, b) % 3 for a, b, _ in want} >= {0, 1}
+    bidx = build_dedup_index(batch, k=3).cache()
+    assert _unordered(_fused_pairs(spark, bidx, prior).collect()) == want
+    spark.catalog.clearCache()
 
 
 def test_fused_pairs_disjointness_misuse_is_detectable(spark):
-    """fused_pairs_with_index / fused_pairs_sql REQUIRE doc_id-disjoint
-    sides (VERDICT r13 'what's wrong' #3): overlapping ids resolve both
-    pair ends against a union sketch holding the id TWICE, silently
-    duplicating verify matches. This pins (a) the misuse path really
-    does diverge from the side-tracked two-pass form, and (b) the
-    check_disjoint flag turns that silent wrongness into a loud error."""
-    from flink_samples_spark.llmops.dedup import (
-        build_dedup_index,
-        fused_pairs_with_index,
-    )
+    """fused_pairs_via_views REQUIRES doc_id-disjoint sides (VERDICT
+    r13 'what's wrong' #3): overlapping ids resolve both pair ends
+    against a union sketch holding the id TWICE, silently duplicating
+    verify matches. check_disjoint=True turns that silent wrongness
+    into a loud error and lets disjoint sides through unchanged."""
+    from flink_samples_spark.llmops.dedup import build_dedup_index
 
     txt = "shared doc text that is identical across the two sides entirely"
     b = spark.createDataFrame([(1, txt), (2, txt + " x")], "doc_id long, text string")
@@ -1154,11 +1120,11 @@ def test_fused_pairs_disjointness_misuse_is_detectable(spark):
     bidx = build_dedup_index(b, k=3).cache()
     idx = build_dedup_index(ix, k=3).cache()
     with pytest.raises(ValueError, match="doc_id-disjoint"):
-        fused_pairs_with_index(bidx, idx, 0.8, check_disjoint=True)
+        _fused_pairs(spark, bidx, idx, check_disjoint=True)
     # disjoint sides pass the guard unchanged
     ix2 = spark.createDataFrame([(10, txt)], "doc_id long, text string")
     idx2 = build_dedup_index(ix2, k=3).cache()
-    out = fused_pairs_with_index(bidx, idx2, 0.8, check_disjoint=True)
+    out = _fused_pairs(spark, bidx, idx2, check_disjoint=True)
     got = {(r.doc_a, r.doc_b) for r in out.collect()}
     assert (10, 1) in got  # the identical cross pair still comes through
     spark.catalog.clearCache()
@@ -1459,9 +1425,7 @@ def test_eager_probe_prunes_salt_stages_when_cold(spark):
     """Round-8 plan contract for salt mode's build-time probe: a
     corpus with zero hot buckets must get the pure cold expansion (no
     hot-cell redistribution exchange in the plan), a hot corpus must
-    keep the salted two-branch shape, and eager_probe=False must keep
-    the lazy union even when cold (the per-micro-batch path). The
-    hot-branch marker is the REPARTITION_BY_COL cell shuffle — the
+    keep the salted two-branch shape. The hot-branch marker is the REPARTITION_BY_COL cell shuffle — the
     one node only the salt branch plants."""
     from flink_samples_spark.llmops.dedup import _bucket_candidate_pairs
 
@@ -1476,10 +1440,6 @@ def test_eager_probe_prunes_salt_stages_when_cold(spark):
     assert "REPARTITION_BY_COL" not in plan_of(cold)
     hot = _bucket_candidate_pairs(keyed, ["band", "band_hash"], 5, "salt")
     assert "REPARTITION_BY_COL" in plan_of(hot)
-    lazy = _bucket_candidate_pairs(
-        keyed, ["band", "band_hash"], 1000, "salt", eager_probe=False
-    )
-    assert "REPARTITION_BY_COL" in plan_of(lazy)
     spark.catalog.clearCache()
 
 

@@ -40,7 +40,6 @@ the hot bucket/doc counts, so recall loss is never silent.
 from __future__ import annotations
 
 import logging
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -51,6 +50,7 @@ from pyspark.sql import functions as F
 
 from flink_samples_spark.llmops.text import document_fingerprint
 from flink_samples_spark.utils import (
+    committed_batch_dirs,
     observe_and_warn,
     parallelize_by_key,
     parallelize_narrow,
@@ -1507,33 +1507,13 @@ def read_prior_index(spark, idx_dir: str, batch_id: int) -> DataFrame | None:
     and after a checkpoint restart any in-memory "index exists" flag
     is gone (skipping the join would drop cross-batch pairs) — so
     both the existence test and the self-exclusion derive from
-    storage, keyed by the batch_id the checkpoint replays. Uses a
-    local-filesystem listing (this engine's checkpoint/index dirs are
-    driver-visible paths; an object-store deployment would swap in
-    the Hadoop FileSystem API)."""
-    if not os.path.isdir(idx_dir):
-        return None
-
-    def _batch_no(d: str) -> int | None:
-        # crash-leftover entries like 'batch=3.tmp' or object-store
-        # marker files must be ignored, not crash the micro-batch
-        try:
-            return int(d.split("=", 1)[1])
-        except ValueError:
-            return None
-
-    # Enumerate ONLY committed prior-batch partitions and read them by
-    # explicit path: a whole-directory read would run partition
-    # discovery over the same crash leftovers the listing just skipped
-    # (a 'batch=3.tmp' value poisons the inferred partition type, and
-    # a bare marker file breaks the parquet reader outright). Path
-    # selection also IS the self-exclusion — no post-filter needed.
+    storage, keyed by the batch_id the checkpoint replays. Only
+    committed ``batch=<int>`` partitions are read, by explicit path
+    (:func:`utils.committed_batch_dirs`): a whole-directory read would
+    run partition discovery over crash leftovers, and path selection
+    also IS the self-exclusion — no post-filter needed."""
     prior_dirs = [
-        os.path.join(idx_dir, d)
-        for d in os.listdir(idx_dir)
-        if d.startswith("batch=")
-        and (n := _batch_no(d)) is not None
-        and n < batch_id
+        d for n, d in committed_batch_dirs(idx_dir).items() if n < batch_id
     ]
     if not prior_dirs:
         return None

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 # Single source of truth for the connector's DSv2 format name; the
 # jar is absent in this sandbox (see readers.CASSANDRA_FORMAT).
 from flink_samples_spark.sources.readers import CASSANDRA_FORMAT
+from flink_samples_spark.utils import committed_batch_dirs
 
 # file formats the generic idempotent branch supports; read_sink can
 # only read parquet back, so the others are write-only sinks
@@ -176,13 +177,16 @@ def sink_to_batch(df: DataFrame, schema) -> DataFrame:
 
 def read_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the idempotent sink's accumulated contents back (parquet
-    sinks only). Raises a clear error when no batch has committed yet
-    — a poller should treat that as "not ready", not as corruption."""
-    if not any(
-        d.startswith("batch=") for d in (os.listdir(out_dir) if os.path.isdir(out_dir) else ())
-    ):
+    sinks only). Reads the committed ``batch=<int>`` directories by
+    explicit path (:func:`utils.committed_batch_dirs`), so a crash
+    leftover such as ``batch=2.tmp`` is not read as data and ``batch``
+    stays an int partition column. Raises a clear error when no batch
+    has committed yet — a poller should treat that as "not ready", not
+    as corruption."""
+    dirs = committed_batch_dirs(out_dir)
+    if not dirs:
         raise FileNotFoundError(
-            f"read_sink: no batch=* directory under {out_dir} yet — the "
+            f"read_sink: no batch=<id> directory under {out_dir} yet — the "
             "streaming query has not committed its first micro-batch"
         )
-    return spark.read.option("basePath", out_dir).parquet(os.path.join(out_dir, "batch=*"))
+    return spark.read.option("basePath", out_dir).parquet(*dirs.values())

@@ -3,11 +3,32 @@
 from __future__ import annotations
 
 import logging
+import os
 import threading
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def committed_batch_dirs(root: str) -> dict[int, str]:
+    """``{batch id: path}`` of the ``batch=<int>`` directories under
+    ``root`` (empty when ``root`` does not exist). Crash leftovers such
+    as ``batch=3.tmp`` and marker files are skipped: read by explicit
+    path, the committed directories are all a reader sees, so a
+    leftover can neither come back as data nor turn the discovered
+    ``batch`` partition column into a string. A local-filesystem
+    listing: the engine's sink and index directories are driver-visible
+    paths; an object-store deployment would list through the Hadoop
+    FileSystem API instead."""
+    if not os.path.isdir(root):
+        return {}
+    out = {}
+    for d in os.listdir(root):
+        name, sep, value = d.partition("=")
+        if name == "batch" and sep and value.isdecimal():
+            out[int(value)] = os.path.join(root, d)
+    return dict(sorted(out.items()))
 
 
 def epoch_double(df: DataFrame, col_name: str) -> Column:

@@ -73,6 +73,20 @@ def test_idempotent_sink_parquet_matches_legacy(spark, tmp_path):
     assert read_sink(spark, new_dir).count() == read_sink(spark, legacy_dir).count() == 10
 
 
+def test_read_sink_skips_crash_leftover_batch_dirs(spark, tmp_path):
+    out = str(tmp_path / "sink")
+    sink = idempotent_parquet_sink(out)
+    sink(spark.range(3).toDF("id"), 0)
+    sink(spark.range(10, 12).toDF("id"), 1)
+    # a writer killed mid-batch leaves its data beside the committed dirs
+    spark.range(100, 105).toDF("id").write.parquet(os.path.join(out, "batch=2.tmp"))
+    got = read_sink(spark, out)
+    assert dict(got.dtypes)["batch"] == "int"
+    assert sorted(tuple(r) for r in got.select("id", "batch").collect()) == [
+        (0, 0), (1, 0), (2, 0), (10, 1), (11, 1)
+    ]
+
+
 def test_idempotent_sink_cassandra_plumbing_and_error(spark):
     with pytest.raises(ValueError, match="keyspace"):
         idempotent_sink("pojo", fmt="cassandra")

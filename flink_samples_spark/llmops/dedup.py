@@ -54,6 +54,7 @@ from flink_samples_spark.utils import (
     observe_and_warn,
     parallelize_by_key,
     parallelize_narrow,
+    partitions_for_size,
 )
 
 _LOG = logging.getLogger(__name__)
@@ -1397,8 +1398,30 @@ def build_dedup_index(docs: DataFrame, k: int = 3, signature: str = "oph") -> Da
     entire sketch table twice). Band id as ARRAY POSITION instead of
     a struct field drops 32 redundant struct ints/doc from storage
     and Arrow transfer; :func:`_index_band_rows` restores the exact
-    rows with posexplode."""
-    hashed = parallelize_narrow(_shingle_hashes(docs, k))
+    rows with posexplode.
+
+    Partitions follow the input's bytes
+    (:func:`utils.partitions_for_size`: one per ``minPartitionSize`` of
+    estimated size, at least 1, at most one per core): the scan is
+    repartitioned up to that count or coalesced down to it. A 100-doc
+    micro-batch (~90 KB) signs in ONE Python task and its index append
+    writes ONE file, instead of one task and one file per core, each
+    task paying the Python worker's fixed cost (~0.2 s) for a handful
+    of rows. Inputs of at least one ``minPartitionSize`` per core, and
+    plans with no size estimate, keep the core-count layout."""
+    hashed = _shingle_hashes(docs, k)
+    cores = hashed.sparkSession.sparkContext.defaultParallelism
+    target = partitions_for_size(hashed)
+    if target == 1 < cores:
+        # the micro-batch case; skips the partition-count probe below
+        # (~40 ms of driver planning per batch)
+        hashed = hashed.coalesce(1)
+    else:
+        n = hashed.rdd.getNumPartitions()
+        if n < target:
+            hashed = hashed.repartition(target)
+        elif target < min(n, cores):
+            hashed = hashed.coalesce(target)
     return hashed.mapInPandas(_band_fn(signature, packed=True), _INDEX_SCHEMA)
 
 
@@ -1511,13 +1534,23 @@ def read_prior_index(spark, idx_dir: str, batch_id: int) -> DataFrame | None:
     committed ``batch=<int>`` partitions are read, by explicit path
     (:func:`utils.committed_batch_dirs`): a whole-directory read would
     run partition discovery over crash leftovers, and path selection
-    also IS the self-exclusion — no post-filter needed."""
+    also IS the self-exclusion — no post-filter needed.
+
+    A small index is read in fewer tasks: when its file bytes come to
+    less than one ``minPartitionSize`` per core
+    (:func:`utils.partitions_for_size`), the scan is coalesced to
+    ``ceil(bytes / minPartitionSize)`` partitions, so a run of tiny
+    per-batch files is not scanned one task per file. A larger index
+    keeps the scan's own partitioning."""
     prior_dirs = [
         d for n, d in committed_batch_dirs(idx_dir).items() if n < batch_id
     ]
     if not prior_dirs:
         return None
     stored = spark.read.schema(_STORED_INDEX_SCHEMA).parquet(*prior_dirs)
+    target = partitions_for_size(stored)
+    if target < spark.sparkContext.defaultParallelism:
+        stored = stored.coalesce(target)
     # array_sort orders the legacy structs by band, i.e. array position
     return stored.select(
         "doc_id",

@@ -1023,11 +1023,15 @@ def q_stream_dedup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
         # 4 replay files at 2 files/trigger = 2 micro-batches: still a
         # genuine incremental run (batch 0 has no index; batch 1 dedups
-        # against the stored one) at half the per-batch signature/join
-        # stage spin-up — the same replay trick that took
-        # q_stream_curate 2.28s -> 1.44s in round 5. The pair set is
-        # complete either way: within-batch pairs come from the batch
-        # index, cross-batch pairs from the banded index join.
+        # against the stored one) with half the per-batch fixed cost —
+        # the same replay trick that took q_stream_curate 2.28s ->
+        # 1.44s in round 5. Within a batch, build_dedup_index and
+        # read_prior_index size their partitions to the batch's bytes
+        # (utils.partitions_for_size), so a small batch signs in one
+        # Python task and appends one index file rather than one per
+        # core. The pair set is complete either way: within-batch pairs
+        # come from the batch index, cross-batch pairs from the banded
+        # index join.
         write_replay_files(docs, replay, n_files=4, order_col="doc_id")
         schema = T.StructType(
             [

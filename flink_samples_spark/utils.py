@@ -50,12 +50,42 @@ def epoch_double(df: DataFrame, col_name: str) -> Column:
     return c.cast("double")
 
 
+MIN_PARTITION_SIZE_CONF = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+
+
+def partitions_for_size(df: DataFrame) -> int:
+    """Partition count for a stage whose work follows ``df``'s bytes:
+    ``clamp(ceil(sizeInBytes / minPartitionSize), 1, defaultParallelism)``.
+
+    ``sizeInBytes`` is the optimized plan's estimate, read on the driver
+    with no job (file scans report their file bytes; a foreachBatch
+    micro-batch reports its batch's files). ``minPartitionSize`` is
+    Spark's own floor for the smallest partition AQE leaves after a
+    shuffle (1 MiB by default). A plan with no estimate reports
+    ``Long.MaxValue`` and so gets the core count. The point is the
+    per-task fixed cost: a Python task costs ~0.2 s of worker CPU
+    however few rows it gets, so a 90 KB micro-batch spread over every
+    core pays that cost once per core for no parallel gain."""
+    spark = df.sparkSession
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    floor = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(MIN_PARTITION_SIZE_CONF)
+    )
+    return max(1, min(spark.sparkContext.defaultParallelism, -(-size // floor)))
+
+
 def parallelize_narrow(df: DataFrame) -> DataFrame:
     """Ensure a narrow (per-row) stage has at least one partition per
     core. A single-file input collapses to 1 partition and would run a
     pandas stage on one core; at real scale the scan is already
     maxPartitionBytes-parallel and this is a no-op (the
-    getNumPartitions probe is driver-side planning only, no job)."""
+    getNumPartitions probe is driver-side planning only, no job).
+
+    Keeps the core count even for tiny inputs (unlike
+    :func:`partitions_for_size`): its callers create their work from
+    the row, not from its bytes (the multimodal decoders synthesize
+    and decode a whole payload from a bare ``doc_id``), so a byte-sized
+    count would put all of that work on one core."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

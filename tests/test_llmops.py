@@ -943,6 +943,148 @@ def test_read_prior_index_ignores_crash_leftovers(spark, tmp_path):
     assert read_prior_index(spark, idx, 3) is None
 
 
+def _parquet_files(root):
+    import glob
+    import os
+
+    return glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True)
+
+
+def _small_docs(spark, n, start=0, words=150):
+    return spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 97} t{j}" for j in range(words)))
+         for i in range(start, start + n)],
+        "doc_id bigint, text string",
+    )
+
+
+def test_build_dedup_index_sizes_small_batch_to_one_partition(spark, tmp_path):
+    """A micro-batch-sized input (100 docs in two small parquet files,
+    far below minPartitionSize) signs in ONE partition and its index
+    append writes ONE part file — not one Python task and one file per
+    core, each task paying the Python worker's fixed cost."""
+    from flink_samples_spark.llmops.dedup import build_dedup_index
+
+    src = str(tmp_path / "src")
+    _small_docs(spark, 100).repartition(2).write.parquet(src)
+    assert len(_parquet_files(src)) == 2
+    docs = spark.read.parquet(src)
+    assert docs.rdd.getNumPartitions() == 2
+
+    bidx = build_dedup_index(docs, k=3)
+    assert bidx.rdd.getNumPartitions() == 1
+    out = str(tmp_path / "idx" / "batch=0")
+    bidx.write.parquet(out)
+    assert len(_parquet_files(out)) == 1
+    assert spark.read.parquet(out).count() == 100
+
+
+def test_build_dedup_index_partitions_follow_bytes(spark, tmp_path):
+    """Between 1 and the core count, the signature stage gets the same
+    byte-sized count whatever the scan's layout: a one-file input is
+    repartitioned up to it and a four-file input coalesced down to it."""
+    import os
+
+    from flink_samples_spark.llmops.dedup import build_dedup_index
+    from flink_samples_spark.utils import MIN_PARTITION_SIZE_CONF
+
+    cores = spark.sparkContext.defaultParallelism
+    if cores < 4:
+        pytest.skip("needs at least 4 cores to sit between 1 and the core count")
+    docs = _small_docs(spark, 100)
+    one, four = str(tmp_path / "one"), str(tmp_path / "four")
+    docs.repartition(1).write.parquet(one)
+    docs.repartition(4).write.parquet(four)
+    n_bytes = sum(os.path.getsize(f) for f in _parquet_files(one))
+    spark.conf.set(MIN_PARTITION_SIZE_CONF, f"{n_bytes // 3}b")
+    try:
+        got = [
+            build_dedup_index(spark.read.parquet(d), k=3).rdd.getNumPartitions()
+            for d in (one, four)
+        ]
+    finally:
+        spark.conf.unset(MIN_PARTITION_SIZE_CONF)
+    assert spark.read.parquet(one).rdd.getNumPartitions() == 1
+    assert spark.read.parquet(four).rdd.getNumPartitions() == 4
+    assert got[0] == got[1] and 1 < got[0] < cores, got
+
+
+def test_partitions_for_size_without_estimate_is_core_count(spark):
+    """A plan with no size estimate keeps the core count, and so does
+    build_dedup_index over it. An RDD-backed frame (createDataFrame
+    from rows or an RDD) is such a plan: Spark reports Long.MaxValue.
+    A mapInPandas is NOT: Spark 4 carries its child's estimate
+    through."""
+    from flink_samples_spark.llmops.dedup import build_dedup_index
+    from flink_samples_spark.utils import partitions_for_size
+
+    cores = spark.sparkContext.defaultParallelism
+    rows = _small_docs(spark, 20)
+    no_stats = spark.createDataFrame(rows.rdd.coalesce(1), rows.schema)
+    assert partitions_for_size(no_stats) == cores
+    assert build_dedup_index(no_stats, k=3).rdd.getNumPartitions() == cores
+    small = spark.range(20)
+    assert partitions_for_size(small) == 1
+    assert partitions_for_size(small.mapInPandas(lambda it: it, small.schema)) == 1
+
+
+def test_parallelize_narrow_keeps_core_count(spark):
+    """The byte-sized rule stays out of parallelize_narrow: its callers
+    (the multimodal decoders) create their work from doc_id, so a tiny
+    single-partition input still spreads over every core."""
+    from flink_samples_spark.utils import parallelize_narrow
+
+    cores = spark.sparkContext.defaultParallelism
+    assert parallelize_narrow(spark.range(10)).rdd.getNumPartitions() == cores
+    one = spark.range(0, 10, 1, 1)
+    assert parallelize_narrow(one).rdd.getNumPartitions() == cores
+
+
+def test_read_prior_index_coalesces_small_index(spark, tmp_path):
+    """Several tiny committed batch=<n> partitions come back with the
+    same rows in at most ceil(bytes / minPartitionSize) partitions; with
+    the floor lowered to a few KB the same many-file index is not
+    shrunk below the core count."""
+    import math
+    import os
+
+    from flink_samples_spark.llmops.dedup import build_dedup_index, read_prior_index
+    from flink_samples_spark.utils import MIN_PARTITION_SIZE_CONF
+
+    idx = str(tmp_path / "idx")
+    n_batches = 8
+    for b in range(n_batches):
+        build_dedup_index(_small_docs(spark, 5, start=5 * b, words=40), k=3).repartition(
+            1
+        ).write.parquet(f"{idx}/batch={b}")
+    files = _parquet_files(idx)
+    assert len(files) == n_batches
+    n_bytes = sum(os.path.getsize(f) for f in files)
+
+    def rows(df):
+        return sorted(
+            (r.doc_id, tuple(r.shingle_hashes), tuple(r.band_hashes)) for r in df.collect()
+        )
+
+    want = rows(spark.read.parquet(*(f"{idx}/batch={b}" for b in range(n_batches))))
+    assert len(want) == 5 * n_batches
+
+    prior = read_prior_index(spark, idx, n_batches)  # default floor: 1 MiB
+    assert prior.rdd.getNumPartitions() <= math.ceil(n_bytes / (1 << 20))
+    assert rows(prior) == want
+
+    cores = spark.sparkContext.defaultParallelism
+    few_kb = 2048
+    assert n_bytes >= cores * few_kb  # the fixture is many floors wide
+    spark.conf.set(MIN_PARTITION_SIZE_CONF, f"{few_kb}b")
+    try:
+        wide = read_prior_index(spark, idx, n_batches)
+        assert wide.rdd.getNumPartitions() >= cores
+        assert rows(wide) == want
+    finally:
+        spark.conf.unset(MIN_PARTITION_SIZE_CONF)
+
+
 _BOILER = (
     "all rights reserved terms of service apply to this page "
     "contact the webmaster for further information about this site"

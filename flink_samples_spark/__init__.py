@@ -18,7 +18,15 @@ Layout:
 - ``plans``      — the declared query catalog (q_* ids from SURVEY.md §2)
 """
 
-from flink_samples_spark.session import get_spark, stop_spark
-
 __all__ = ["get_spark", "stop_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # PEP 562: importing the package imports no pyspark, so the Python
+    # worker daemon (``worker_daemon``) can set ``sys.path`` first.
+    if name in __all__:
+        from flink_samples_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -42,6 +42,29 @@ projection of a 1000-executor deployment):
   depends on identity hashes, and in runs where one does, the same
   ~20 classes were recompiled in every micro-batch. At 1000 entries
   Janino compiles in one ``ingest_dedup`` drain fell from 75 to 13.
+- Python workers import pyspark from site-packages, not from Spark's
+  ``pyspark.zip``. Every task runs ``worker_util.setup_spark_files``,
+  which calls ``importlib.invalidate_caches()``; on CPython 3.11 that
+  makes each cached ``zipimporter`` re-read its archive's central
+  directory, and Spark's worker ``PYTHONPATH`` holds ``pyspark.zip``,
+  the py4j zip and the 15 MB spark-core jar (0.11-0.17 s of CPU per
+  call, 0.000 s without them). ``PYTHON_DAEMON_MODULE``
+  (``worker_daemon``) reads ``pyspark/version.py`` out of the zip
+  without importing pyspark; only when it equals the installed
+  pyspark's version does it drop Spark's archives from ``sys.path``
+  before running ``pyspark.daemon.manager()``. A different version,
+  or no zip, keeps Spark's path. ``spark.executorEnv.PYTHONPATH``
+  names the package's parent directory, because the daemon starts
+  with ``python -m`` in the driver's working directory. perfbench
+  ``ewma_python_state`` on a 4-core host, 10 alternating pairs:
+  ``cpu_ms_per_kevent`` 699 -> 439, ``drain_eps`` 4,980 -> 8,011,
+  ``latency_p50_s`` 1.41 -> 0.92. Under cProfile a warm worker task of
+  an identity ``mapInPandas`` used 1.7-2.2 s of CPU with Spark's path
+  (16 zip directory reads) and 8-10 ms without it.
+  A session built without ``get_spark`` (the driver's own or a
+  vanilla ``SparkSession``: ``test_vanilla_session.py``,
+  ``driver_sim --vanilla``) does not get this conf and keeps Spark's
+  default worker path.
 """
 
 from __future__ import annotations
@@ -60,6 +83,12 @@ CHECKPOINT_FILE_MANAGER = (
 )
 # Generated classes kept by Spark's codegen cache (default 100).
 CODEGEN_CACHE_ENTRIES = 1000
+# Python worker daemon that imports pyspark from site-packages when its
+# version matches Spark's pyspark.zip (module docstring).
+PYTHON_DAEMON_MODULE = "flink_samples_spark.worker_daemon"
+# Directory that holds the package: the daemon starts with ``python -m``
+# in the driver's working directory, which need not be the repo root.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def default_parallelism() -> int:
@@ -125,6 +154,8 @@ def get_spark(
             "spark.sql.streaming.checkpointFileManagerClass", CHECKPOINT_FILE_MANAGER
         )
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():

@@ -32,10 +32,6 @@ def _dot(a: Column, b: Column) -> Column:
     )
 
 
-def _cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
 def nearest_centroid_assign(
     vectors: DataFrame, centroids: DataFrame
 ) -> DataFrame:

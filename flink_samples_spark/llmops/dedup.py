@@ -1581,9 +1581,9 @@ def dedup_against_index(
     and the sketch-verify join of actual candidates.
 
     Caching contract: the batch's hashed shingles are ``.cache()``d
-    (feed banding + verify, same contract as minhash_lsh_pairs);
-    repeated per-micro-batch callers should ``clearCache()`` between
-    batches, as q_stream_dedup_index does."""
+    (feed banding + verify, same contract as minhash_lsh_pairs). No
+    handle to that cache is returned, so nothing releases it: a
+    per-micro-batch caller keeps one cached batch per call."""
     hb = parallelize_by_key(_shingle_hashes(batch, k), "doc_id").cache()
     schema = "doc_id bigint, band int, band_hash bigint"
     bands = _index_band_rows(index, side=0).unionByName(

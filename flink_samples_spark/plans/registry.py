@@ -67,11 +67,12 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # Round-14 allocation (manifest after r13: 210 of 210 ever-green;
     # latest-green histogram r9:21 r10:44 r11:46 r12:49 r13:50).
     # Optimization-round priority #1 is certifying the latest diff:
-    # the eighteen queries whose physical plans recent changes touch
+    # the 27 queries whose physical plans recent changes touch
     # (the decode_features codec table; bucketed EWMA state; keyed
-    # sketch caches; the SQL ingestion fast path) lead the window so
-    # the oracle gate re-certifies exactly what changed.  Then the
-    # 21-query r9 backlog the r13 comment promised (the TPC-H-shape
+    # sketch caches; the SQL ingestion fast path; the streaming
+    # queries moved onto the one replay harness) lead the window so
+    # the oracle gate re-certifies exactly what changed.  Then 12 of
+    # the 21-query r9 backlog the r13 comment promised (the TPC-H-shape
     # remainder), the flagship canary, one sentinel for each family
     # that would otherwise have no seat, and 5 seats burning down the
     # r10 cohort.  The rest of the r10 cohort is enumerated at the
@@ -98,7 +99,19 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "q_dedup_cross",
     "q_dedup_simhash",
     "q_dedup_incremental",
-    # ---- longest-stale rotation: last green r9 (full cohort, 21) ----
+    # the streaming queries moved onto the one replay harness
+    # (_run_streaming); q_stream_ewma and q_stream_dedup_index above
+    "q_late_data",
+    "q_stream_join",
+    "q_stream_curate",
+    "q_stream_upsert",
+    "q_stream_update_counts",
+    "q_stream_complete_counts",
+    "q_stream_join_outer",
+    "q_stream_pattern_seq",
+    "q_stream_pattern_absence",
+    # ---- longest-stale rotation: last green r9 (12 of 21; the other
+    # ---- nine gave their seats to the harness queries, see backlog) ----
     "q_agg_grouping_sets",
     "q_agg_hll_sketch",
     "q_agg_stats",
@@ -111,15 +124,6 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "q_pipeline_idle_cust",     # Q22
     "q_pipeline_large_orders",  # Q18
     "q_pipeline_late_solo_supp",# Q21
-    "q_pipeline_market_share",  # Q8
-    "q_pipeline_min_cost_supp", # Q2
-    "q_pipeline_order_priority",# Q4
-    "q_pipeline_part_value",    # Q11
-    "q_pipeline_priority_lines",# Q12
-    "q_pipeline_small_qty",     # Q17
-    "q_pipeline_supp_diversity",# Q16
-    "q_pipeline_volume_shipping",# Q7
-    "q_win_distribution",
     # ---- flagship canary ----
     "q_session_window",         # flagship; §2.9 batch windows (bench canary)
     # ---- family sentinels (tests/test_registry_order.py pins one
@@ -147,7 +151,13 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     # q_stream_ewma: q_curation_v2 q_dedup_span q_dedup_within
     # q_quality_score q_scd2 q_tokenize_vocab, and the four that gave
     # theirs to the decode_features queries: q_lm_score
-    # q_training_pipeline q_embed_kmeans q_sim_topk_int8.
+    # q_training_pipeline q_embed_kmeans q_sim_topk_int8. Also the nine
+    # r9-cohort queries that gave theirs to the streaming queries moved
+    # onto the one replay harness: q_pipeline_market_share
+    # q_pipeline_min_cost_supp q_pipeline_order_priority
+    # q_pipeline_part_value q_pipeline_priority_lines
+    # q_pipeline_small_qty q_pipeline_supp_diversity
+    # q_pipeline_volume_shipping q_win_distribution.
 )
 
 

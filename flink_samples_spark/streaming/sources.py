@@ -23,8 +23,6 @@ Spark's model makes it an explicit ``ts`` column that
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,13 +66,7 @@ def pojo_stream_with_lateness(
     )
 
 
-def write_replay_files(
-    df,
-    out_dir: str | None = None,
-    n_files: int = 10,
-    order_col: str = "ts",
-    stats_out: dict | None = None,
-) -> str:
+def write_replay_files(df, out_dir: str, n_files: int = 10, order_col: str = "ts"):
     """Materialize a batch DataFrame as N single-file parquet chunks in
     event-time order — one micro-batch each under
     ``maxFilesPerTrigger=1``. Deterministic harness for
@@ -89,14 +81,11 @@ def write_replay_files(
        Partitions(order_col).write.parquet(...)``) and feed them to
        :func:`file_replay_stream` directly.
 
-    ``stats_out`` (optional dict) receives ``n_rows`` and
-    ``max_order`` (the maximum ``order_col`` value, i.e. the last row
-    of the sorted fetch) — callers that need the replay's max event
-    time for a flush sentinel read it from here instead of running a
-    separate max-aggregate job over the same input (r13: one Spark
-    job per streaming query saved).
+    Returns the maximum ``order_col`` value (the last row of the
+    sorted fetch; ``None`` for an empty or all-null input), so a
+    caller that needs the replay's max event time for a flush sentinel
+    runs no separate max-aggregate job over the same input.
     """
-    out_dir = out_dir or tempfile.mkdtemp(prefix="replay_")
     os.makedirs(out_dir, exist_ok=True)
     # full-column tie-break: orderBy(order_col) alone leaves equal
     # timestamps in nondeterministic relative order across runs, so a
@@ -115,19 +104,13 @@ def write_replay_files(
             "than 1M rows. Use a Spark-native sorted write for large replays."
         )
     n = len(pdf)
-    if stats_out is not None:
-        stats_out["n_rows"] = n
-        mx = pdf[order_col].iloc[-1] if n else None
-        # NaT guard (ADVICE r13): an all-null order column sorts NaT
-        # last, and a NaT sentinel would later feed a null timestamp
-        # literal — report None exactly like the empty-input case (a
-        # Spark max()-aggregate over all-null rows returns NULL too)
-        if mx is not None and mx != mx:  # NaN/NaT are not equal to themselves
-            mx = None
-        # pandas Timestamp → plain datetime so downstream
-        # createDataFrame/literal use sees exactly what a Spark
-        # max()-aggregate row would have carried
-        stats_out["max_order"] = mx.to_pydatetime() if hasattr(mx, "to_pydatetime") else mx
+    mx = pdf[order_col].iloc[-1] if n else None
+    # NaT guard (ADVICE r13): an all-null order column sorts NaT
+    # last, and a NaT sentinel would later feed a null timestamp
+    # literal — report None exactly like the empty-input case (a
+    # Spark max()-aggregate over all-null rows returns NULL too)
+    if mx is not None and mx != mx:  # NaN/NaT are not equal to themselves
+        mx = None
     per = max(n // n_files, 1)
     for i in range(n_files):
         lo = i * per
@@ -143,7 +126,10 @@ def write_replay_files(
         )
         # file mtime ordering == replay order
         os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
-    return out_dir
+    # pandas Timestamp → plain datetime so downstream
+    # createDataFrame/literal use sees exactly what a Spark
+    # max()-aggregate row would have carried
+    return mx.to_pydatetime() if hasattr(mx, "to_pydatetime") else mx
 
 
 def file_replay_stream(
@@ -156,7 +142,3 @@ def file_replay_stream(
         .option("maxFilesPerTrigger", files_per_trigger)
         .parquet(replay_dir)
     )
-
-
-def cleanup_replay(replay_dir: str) -> None:
-    shutil.rmtree(replay_dir, ignore_errors=True)

@@ -534,7 +534,7 @@ def test_ewma_state_refuses_keys_float64_cannot_separate(spark, tmpdirs):
         _run_available_now(ewma_with_state(stream), sink, cp)
 
 
-def test_write_replay_files_refuses_large_inputs(spark):
+def test_write_replay_files_refuses_large_inputs(spark, tmp_path):
     """The replay harness materializes on the driver (toPandas): it
     must hard-refuse >1M rows so the test-only path can never ride
     into a production pipeline (ADVICE r3/r4 guard)."""
@@ -544,7 +544,7 @@ def test_write_replay_files_refuses_large_inputs(spark):
 
     big = spark.range(1_000_001).selectExpr("id as ts", "id as value")
     with pytest.raises(ValueError, match="driver-side test harness"):
-        write_replay_files(big, order_col="ts")
+        write_replay_files(big, str(tmp_path), order_col="ts")
 
 
 def test_idempotent_sink_rejects_batch_data_column(spark, tmpdirs):
@@ -569,3 +569,57 @@ def test_idempotent_sink_rejects_batch_data_column(spark, tmpdirs):
     ok = df.withColumnRenamed("batch", "seq")
     idempotent_sink(os.path.join(sink, "ok"))(ok, 0)
     assert read_sink(spark, os.path.join(sink, "ok")).count() == 3
+
+
+def test_run_streaming_removes_its_temp_root_when_build_fails(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The catalog's replay harness writes the replay (and its flush
+    sentinel) before ``build`` runs; when ``build`` raises, the error
+    reaches the caller and the run's one temp root is removed."""
+    from flink_samples_spark.plans import catalog_streaming as cs
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    written = []
+
+    def build(stream):
+        for root, _dirs, files in os.walk(tmp_path):
+            written.extend(os.path.join(root, f) for f in files)
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        cs._run_streaming(
+            spark, load_table(spark, sf_dir, "events"), cs._EVENTS, build, tail=cs._FLUSH
+        )
+    assert any(p.endswith(os.path.join("replay", "chunk_99999.parquet")) for p in written)
+    assert os.listdir(tmp_path) == []
+
+
+def test_stream_dedup_index_keeps_other_cached_frames(spark, sf_dir):
+    """q_stream_dedup_index releases only its own per-batch caches.
+    foreachBatch's cloned session shares the application's
+    CacheManager, so a per-batch ``clearCache()`` would also drop a
+    frame the caller cached; once the grouped-cache waiter has run,
+    the query leaves no cache entry of its own either."""
+    import time
+
+    from pyspark import StorageLevel
+
+    from flink_samples_spark.plans import QUERIES
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip(f"no sf0.01 dataset beside {sf_dir}")
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # entries other tests left behind
+    mine = spark.range(100).selectExpr("id * 2 AS x").cache()
+    assert mine.count() == 100
+    try:
+        assert QUERIES["q_stream_dedup_index"](spark, sf).count() > 0
+        assert mine.storageLevel != StorageLevel.NONE, "the caller's frame was uncached"
+    finally:
+        mine.unpersist(blocking=True)
+    deadline = time.monotonic() + 30
+    while not cache_manager.isEmpty() and time.monotonic() < deadline:
+        time.sleep(0.2)
+    assert cache_manager.isEmpty(), "the query left a cache entry behind"
